@@ -69,12 +69,12 @@ SHOWCASE = {
     "carry-in prefix over the calendar-bounded day frame — no "
     "session-grain single-partition window",
     "unit_gini_concentration": "Lorenz rank over per-customer totals via "
-    "two-pass global_row_number (range partition + local rank + "
+    "two-pass group-less grouped_row_number (range partition + local rank + "
     "triangular prefix offsets) — no single-partition WindowExec on the "
     "customer dimension",
     "unit_hits_scores": "HITS: four edge-grain groupBy+join half-"
     "iterations with map-side combine; auth_rank over the part dimension "
-    "via the same two-pass global_row_number",
+    "via the same two-pass group-less grouped_row_number",
     "unit_ann_lsh": "multi-probe SRP-LSH: narrow integer bucket-code map, "
     "probe explosion, candidate equi-join on the code (no cross product)",
     "unit_ewma_user_value": "per-user EWMA recurrence: single hash "

@@ -1,12 +1,14 @@
 #!/usr/bin/env python
 """Dump .explain("formatted") for every bench-timed query (plus the
-reference-shaped e2e sub-frames) to plans/r13/<name>_<tag>.txt.
+reference-shaped e2e sub-frames) to plans/<round>/<name>_<tag>.txt.
 
-Usage: python scripts/dump_r13_plans.py before|after [name ...]
+Usage: python scripts/dump_round_plans.py <round> before|after [name ...]
+  e.g. python scripts/dump_round_plans.py r13 before
 
-The optimization-round deliverable: the judge checks plan claims in
-OPTIMIZATION_r13.md against these files. Uses the same session factory
-as bench.py so plan shapes match what the bench executes.
+An optimization round's plan record: the plan claims in
+OPTIMIZATION_<round>.md are checked against these files. Uses the same
+session factory as bench.py so plan shapes match what the bench
+executes.
 """
 
 from __future__ import annotations
@@ -21,16 +23,18 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
-    only = set(sys.argv[2:])
-    out_dir = os.path.join(REPO, "plans", "r13")
+    if len(sys.argv) < 3 or sys.argv[2] not in ("before", "after"):
+        raise SystemExit(__doc__)
+    rnd, tag = sys.argv[1], sys.argv[2]
+    only = set(sys.argv[3:])
+    out_dir = os.path.join(REPO, "plans", rnd)
     os.makedirs(out_dir, exist_ok=True)
 
     from validation_database_spark.session import get_spark
     from validation_database_spark.suite import all_specs, unit_specs
     from validation_database_spark.util import release_pins
 
-    spark = get_spark(app_name="dump_r13_plans")
+    spark = get_spark(app_name=f"dump_{rnd}_plans")
     specs = all_specs()
     specs.update({n: s for n, s in unit_specs().items() if s.headline})
 

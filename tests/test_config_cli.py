@@ -38,10 +38,56 @@ def test_identical_sources_reconcile_clean(spark, sf_dir, tmp_path):
     assert not os.path.exists(str(tmp_path / "report.csv") + "_differing_values.csv")
 
 
+def test_clean_run_removes_stale_detail(spark, tmp_path):
+    """A detail CSV left under the prefix by an earlier run with
+    differences must not survive a clean run next to its fresh
+    summary: both files always describe the same run."""
+    from validation_database_spark.operators.reconcile import reconcile
+    from validation_database_spark.operators.report import write_reports
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "id string, c string")
+
+    prefix = str(tmp_path / "report.csv")
+    detail = prefix + "_differing_values.csv"
+    dirty = reconcile(
+        frame([("1", "x"), ("2", "y")]), frame([("1", "x"), ("2", "z")]),
+        check_column="c", mode="string",
+    )
+    write_reports(dirty, prefix, single_file=True)
+    assert glob.glob(os.path.join(detail, "*.csv"))
+    assert spark.read.option("header", True).csv(prefix).count() == 1
+
+    clean = reconcile(frame([("1", "x")]), frame([("1", "x")]), check_column="c", mode="string")
+    write_reports(clean, prefix, single_file=True)
+    assert not os.path.exists(detail)
+    summary = spark.read.option("header", True).csv(prefix)
+    assert summary.columns == ["missing_in_db1", "missing_in_db2", "differing_values"]
+    assert summary.count() == 0
+
+
 def test_exactly_two_sources_enforced(spark, sf_dir, tmp_path):
     cfg = _base_config(sf_dir, tmp_path)
     cfg["databases"] = ["a", "b", "c"]
     with pytest.raises(ValueError, match="exactly two"):
+        run_validation(spark, cfg)
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("data_type", "decimal"),
+        ("data_type", 3),
+        ("threshold", -0.1),
+        ("threshold", 1.5),
+        ("threshold", "high"),
+        ("threshold", float("nan")),
+    ],
+)
+def test_bad_config_value_names_the_key(spark, sf_dir, tmp_path, key, value):
+    cfg = _base_config(sf_dir, tmp_path)
+    cfg[key] = value
+    with pytest.raises(ValueError, match=f"'{key}'"):
         run_validation(spark, cfg)
 
 

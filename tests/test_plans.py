@@ -602,9 +602,10 @@ def test_peak_concurrency_sweep_sharded_by_day(spark, sf_dir):
 
 
 def test_gini_rank_is_distributed_range_partition(spark, sf_dir):
-    """The per-customer-total rank is the two-pass global_row_number
-    (range partition + local rank + prefix offsets), never a
-    single-partition row_number over the customer dimension."""
+    """The per-customer-total rank is the two-pass group-less
+    grouped_row_number (range partition + local rank + prefix
+    offsets), never a single-partition row_number over the customer
+    dimension."""
     from validation_database_spark.suite.analytics import q_gini_concentration
 
     plan = physical_plan(q_gini_concentration(spark, sf_dir))
@@ -613,8 +614,8 @@ def test_gini_rank_is_distributed_range_partition(spark, sf_dir):
 
 def test_hits_rank_is_distributed_range_partition(spark, sf_dir):
     """The auth_rank over the part dimension is the two-pass
-    global_row_number — no single-partition WindowExec on a frame
-    that grows with the part dimension."""
+    group-less grouped_row_number — no single-partition WindowExec on
+    a frame that grows with the part dimension."""
     from validation_database_spark.suite.advanced import q_hits_scores
 
     plan = physical_plan(q_hits_scores(spark, sf_dir))

@@ -216,13 +216,19 @@ def test_ivf_geometry_env_overrides_bake_into_both_engines():
     }, got
 
 
-def test_grouped_row_number_matches_window_form(spark, sf_dir):
+@pytest.mark.parametrize("shape", ["global", "lang", "tag_union"])
+def test_grouped_row_number_matches_window_form(spark, sf_dir, shape):
     """grouped_row_number ≡ row_number() OVER (PARTITION BY group
     ORDER BY key) — on a round-robin-spread input so the
     range-partition boundaries genuinely split groups across
-    partitions (the regime the helper exists for), including a group
-    key absent from MIX_TARGETS-style configs and NULL group rows."""
-    from pyspark.sql import Window
+    partitions (the regime the helper exists for), NULL group rows
+    kept. Three shapes: no groups (the global rank the sort-rank
+    queries use), a language key including a value absent from
+    MIX_TARGETS-style configs, and report_summary's tag-union of
+    several lists (one of them NULL-tagged)."""
+    from functools import reduce
+
+    from pyspark.sql import DataFrame, Window
 
     from validation_database_spark.operators.report import grouped_row_number
 
@@ -236,43 +242,55 @@ def test_grouped_row_number_matches_window_form(spark, sf_dir):
             ),
         )
         .withColumn("key", F.md5(F.col("doc_id").cast("string")))
-        .repartition(16)  # destroy any helpful pre-ordering
     )
-    got = grouped_row_number(docs, "lang", ["key", "doc_id"], rn_col="rn")
-    w = Window.partitionBy("lang").orderBy("key", "doc_id")
+    groups = {"global": [], "lang": ["lang"], "tag_union": ["__tag"]}[shape]
+    if shape == "tag_union":
+        tags = ["m1", "m2", "dv", None]
+        docs = reduce(
+            DataFrame.unionByName,
+            [
+                docs.filter(F.col("doc_id") % len(tags) == i).select(
+                    F.lit(tag).cast("string").alias("__tag"), "doc_id", "key"
+                )
+                for i, tag in enumerate(tags)
+            ],
+        )
+    docs = docs.repartition(16)  # destroy any helpful pre-ordering
+    got = grouped_row_number(docs, groups, ["key", "doc_id"], rn_col="rn")
+    w = Window.partitionBy(*groups).orderBy("key", "doc_id")
     want = docs.withColumn("rn", F.row_number().over(w).cast("bigint"))
-    cols = ["lang", "doc_id", "rn"]
+    cols = groups + ["doc_id", "rn"]
 
     def rows(df):
         return sorted(
-            (r["lang"] or "", r["doc_id"], r["rn"])
+            tuple("" if v is None else v for v in r)
             for r in df.select(cols).collect()
         )
 
+    assert dict(got.dtypes)["rn"] == "bigint"
     assert rows(got) == rows(want)
 
 
 def test_release_rank_pins_unpersists(spark, sf_dir):
-    """The rank helpers pin their ranked subtree for partition-
-    assignment determinism; release_rank_pins() must actually empty
+    """The rank helper pins its ranked subtree for partition-
+    assignment determinism; util.release_pins() must actually empty
     the CacheManager afterwards (ADVICE r6 — CacheManager never GCs,
     so without the release a long session accumulates corpus-sized
     cached frames per invocation)."""
-    from pyspark.sql import functions as SF
-
-    from validation_database_spark.operators import report
+    from validation_database_spark import util
+    from validation_database_spark.operators.report import grouped_row_number
     from validation_database_spark.sources import load_table
 
     spark.catalog.clearCache()
-    report._PINNED.clear()
+    util._PINNED.clear()
     orders = load_table(spark, "orders", sf_dir).select("o_orderkey")
-    ranked = report.global_row_number(orders, "o_orderkey")
+    ranked = grouped_row_number(orders, [], "o_orderkey")
     assert ranked.count() == orders.count()
-    assert report._PINNED, "helper must register its pin"
+    assert util._PINNED, "helper must register its pin"
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert not cm.isEmpty(), "the ranked subtree must be cached"
-    report.release_rank_pins()
-    assert not report._PINNED
+    util.release_pins()
+    assert not util._PINNED
     assert cm.isEmpty(), "release must unpersist every pinned frame"
     # rank values survive the release (recompute path stays correct)
     top = ranked.orderBy("rn").limit(3).collect()

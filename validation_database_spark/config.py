@@ -27,6 +27,7 @@ import yaml
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .operators.compare import MODES
 from .operators.keys import composite_id
 from .operators.reconcile import ReconcileResult, reconcile
 from .operators.report import write_reports
@@ -94,6 +95,20 @@ def _validate(config: dict[str, Any]) -> None:
             raise ValueError(
                 "missing required config key 'composite_id_columns' (or 'unique_key')"
             )
+    data_type = config.get("data_type", "string")
+    if str(data_type).lower() not in MODES:
+        raise ValueError(
+            f"config key 'data_type' must be one of {MODES}, got {data_type!r}"
+        )
+    threshold = config.get("threshold", 1.0)
+    try:
+        in_range = 0.0 <= float(threshold) <= 1.0
+    except (TypeError, ValueError):
+        in_range = False
+    if not in_range:
+        raise ValueError(
+            f"config key 'threshold' must be a number in [0, 1], got {threshold!r}"
+        )
 
 
 def _key_columns(config: dict[str, Any]) -> list[str] | None:

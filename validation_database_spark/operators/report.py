@@ -5,82 +5,30 @@ missing-in-db2 ids, differing-value dicts) with ``None`` to equal
 length and writes them as three columns (running_validation.py:262-275
 and the string/date twins). Positional alignment is meaningless — it
 is pure presentation — but the shape is part of the tool's contract,
-so we reproduce it *distributed*: ``row_number() OVER (ORDER BY id)``
-on each list, then two full-outer joins on the row number.
+so we reproduce it *distributed*: rank each list by id, then pivot
+the ranks into one row per position.
 
 Scale note: the naive encoding (``row_number() OVER (ORDER BY id)``)
-serializes into a single-partition sort. ``global_row_number`` below
-avoids that: range-partition by the key, rank locally, add
+serializes into a single-partition sort. ``grouped_row_number`` below
+avoids that: range-partition by (group, key), rank locally, add
 per-partition offsets — two distributed passes, no single-task sort,
 so even a pathological discrepancy report (everything differs) stays
-parallel. The three result DataFrames remain the primary (unbounded)
-API; ``report_summary`` is the presentation-compat sink on top.
+parallel. The summary ranks its three lists in ONE such pass, grouped
+by a list tag; with no group columns the helper is the global rank
+the suite's sort-rank queries use. The three result DataFrames remain
+the primary (unbounded) API; ``report_summary`` is the
+presentation-compat sink on top.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from functools import reduce
+
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from ..util import pin
 from .reconcile import ReconcileResult
-
-# The rank helpers persist their ranked subtree for partition-
-# assignment determinism (see the persist comments in
-# global_row_number / grouped_row_number: the pin must survive until
-# the CALLER materializes the returned frame, so the helper cannot
-# unpersist it itself). Registered in the shared util pin registry;
-# long-running hosts call release_pins() between queries — bench.py
-# does after each spec's cold+warm pair (ADVICE r6).
-from ..util import _PINNED, release_pins as release_rank_pins  # noqa: F401
-
-
-def global_row_number(
-    df: DataFrame,
-    order_col: str | list[str] | tuple[str, ...],
-    rn_col: str = "rn",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Global 1-based rank by ``order_col`` (one column name or a
-    sequence for a composite sort key) WITHOUT a single-partition
-    sort: range-partition on the key(s), rank locally per partition,
-    then add per-partition offsets (a tiny cumulative sum over
-    partition counts). Two passes, fully distributed — the scalable
-    form of ``row_number() OVER (ORDER BY …)`` for unique keys.
-    """
-    order_cols = [order_col] if isinstance(order_col, str) else list(order_col)
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
-    ranged = df.repartitionByRange(n, *[F.col(c) for c in order_cols]).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    local_w = Window.partitionBy("__pid").orderBy(*order_cols)
-    # persist: the ranked subtree feeds BOTH the offsets aggregation
-    # and the final join. RangePartitioner samples boundaries per
-    # evaluation, so without pinning, the two branches can see
-    # *different* partition assignments and the offsets stop matching
-    # the local ranks (observed as nondeterministic ranks under
-    # round-robin-spread inputs).
-    local = ranged.withColumn("__lrn", F.row_number().over(local_w)).persist()
-    _PINNED.append(local)
-    # one row per partition — prefix offsets via a tiny triangular
-    # self-join (≤ n_partitions² rows), not an unpartitioned window:
-    # keeps every plan in the job free of single-partition WindowExec.
-    counts = local.groupBy("__pid").agg(F.count("*").alias("__cnt"))
-    offsets = (
-        counts.alias("a")
-        .join(
-            counts.alias("b"),
-            F.col("b.__pid") < F.col("a.__pid"),
-            "left",
-        )
-        .groupBy(F.col("a.__pid").alias("__pid"))
-        .agg(F.coalesce(F.sum("b.__cnt"), F.lit(0)).alias("__offset"))
-    )
-    return (
-        local.join(F.broadcast(offsets), "__pid")
-        .withColumn(rn_col, (F.col("__lrn") + F.col("__offset")).cast("int"))
-        .drop("__pid", "__lrn", "__offset")
-    )
 
 
 def grouped_row_number(
@@ -88,58 +36,57 @@ def grouped_row_number(
     group_cols: str | list[str] | tuple[str, ...],
     order_cols: str | list[str] | tuple[str, ...],
     rn_col: str = "rn",
-    partitions: int | None = None,
 ) -> DataFrame:
-    """Per-group 1-based rank: the distributed form of
-    ``row_number() OVER (PARTITION BY group ORDER BY key)`` for when a
-    SINGLE group's rows outgrow one partition (a bounded-cardinality
-    group key — language, event type — over a data-grain frame, where
-    the plain window sends a whole group to one reducer).
+    """Per-group 1-based ``bigint`` rank: the distributed form of
+    ``row_number() OVER (PARTITION BY group ORDER BY key)``; an empty
+    ``group_cols`` gives the global ``row_number() OVER (ORDER BY
+    key)``. Built for when a SINGLE group's rows outgrow one partition
+    (no groups at all, or a bounded-cardinality key — language, event
+    type, the summary's list tag — over a data-grain frame, where the
+    plain window sends a whole group to one reducer).
 
     Range-partition on the composite (group, key) — a group spans a
     RUN of partitions — rank locally per (partition, group), then add
     per-(partition, group) prefix offsets from one triangular
-    self-join over the ≤ n_partitions × |groups| count rows. Same
-    two-pass structure as ``global_row_number`` (which is the
-    group-less special case) and ``_numbered_tagged`` (the fixed
-    two-column union form).
+    self-join over the ≤ n_partitions × |groups| count rows.
     """
     groups = [group_cols] if isinstance(group_cols, str) else list(group_cols)
     orders = [order_cols] if isinstance(order_cols, str) else list(order_cols)
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     ranged = df.repartitionByRange(
         n, *[F.col(c) for c in groups + orders]
     ).withColumn("__pid", F.spark_partition_id())
     local_w = Window.partitionBy("__pid", *groups).orderBy(*orders)
-    # persist: same double-evaluation hazard as global_row_number —
-    # the ranged subtree feeds both the offsets agg and the join.
-    local = ranged.withColumn("__lrn", F.row_number().over(local_w)).persist()
-    _PINNED.append(local)
+    # pin: the ranked subtree feeds BOTH the offsets aggregation and
+    # the final join. RangePartitioner samples boundaries per
+    # evaluation, so without pinning, the two branches can see
+    # *different* partition assignments and the offsets stop matching
+    # the local ranks (observed as nondeterministic ranks under
+    # round-robin-spread inputs). The pin must survive until the
+    # CALLER materializes the returned frame, so it is registered for
+    # util.release_pins() rather than unpersisted here.
+    local = pin(ranged.withColumn("__lrn", F.row_number().over(local_w)))
+    # one row per (partition, group) — prefix offsets via a tiny
+    # triangular self-join, not an unpartitioned window: keeps every
+    # plan in the job free of single-partition WindowExec.
     counts = local.groupBy("__pid", *groups).agg(F.count("*").alias("__cnt"))
-    same_group = None
+    # null-safe on the group key: a plain equi-join would silently
+    # drop NULL-group rows that the window form ranks as their own
+    # partition.
+    earlier = F.col("b.__pid") < F.col("a.__pid")
+    back = F.col("l.__pid") == F.col("o.__pid")
     for c in groups:
-        eq = F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}"))
-        same_group = eq if same_group is None else (same_group & eq)
+        earlier = earlier & F.col(f"a.{c}").eqNullSafe(F.col(f"b.{c}"))
+        back = back & F.col(f"l.{c}").eqNullSafe(F.col(f"o.{c}"))
     offsets = (
         counts.alias("a")
-        .join(
-            counts.alias("b"),
-            same_group & (F.col("b.__pid") < F.col("a.__pid")),
-            "left",
-        )
+        .join(counts.alias("b"), earlier, "left")
         .groupBy(
             F.col("a.__pid").alias("__pid"),
             *[F.col(f"a.{c}").alias(c) for c in groups],
         )
         .agg(F.coalesce(F.sum("b.__cnt"), F.lit(0)).alias("__offset"))
     )
-    # null-safe on the group key: a plain equi-join would silently
-    # drop NULL-group rows that the window form ranks as their own
-    # partition.
-    back = F.col("l.__pid") == F.col("o.__pid")
-    for c in groups:
-        back = back & F.col(f"l.{c}").eqNullSafe(F.col(f"o.{c}"))
     return (
         local.alias("l")
         .join(F.broadcast(offsets).alias("o"), back)
@@ -147,71 +94,6 @@ def grouped_row_number(
         .withColumn(rn_col, (F.col("__lrn") + F.col("__offset")).cast("bigint"))
         .drop("__pid", "__lrn", "__offset")
     )
-
-
-def _numbered_tagged(parts: dict[str, DataFrame]) -> DataFrame:
-    """Per-tag global 1-based ranks for several (id, val) lists in ONE
-    range-partition pass instead of one ``global_row_number`` job per
-    list: tag-union the lists, range-partition on (tag, id), rank
-    locally per (partition, tag), and add per-(tag, partition) prefix
-    offsets from one tiny triangular self-join. Same two-distributed-
-    pass structure as ``global_row_number`` (no single-task sort), a
-    third of the jobs. Returns the combined (``__tag``, ``val``,
-    ``rn``) frame; ``_tagged_to_columns`` pivots it to one column per
-    tag in a single aggregation.
-    """
-    tagged = None
-    for tag, df in parts.items():
-        part = df.select(
-            F.lit(tag).alias("__tag"), F.col("id"), F.col("val")
-        )
-        tagged = part if tagged is None else tagged.unionByName(part)
-    spark = tagged.sparkSession
-    n = spark.sparkContext.defaultParallelism
-    ranged = tagged.repartitionByRange(
-        n, F.col("__tag"), F.col("id")
-    ).withColumn("__pid", F.spark_partition_id())
-    local_w = Window.partitionBy("__pid", "__tag").orderBy("id")
-    # persist: same double-evaluation hazard as global_row_number —
-    # the ranged subtree feeds both the offsets agg and the join.
-    local = ranged.withColumn("__lrn", F.row_number().over(local_w)).persist()
-    _PINNED.append(local)
-    counts = local.groupBy("__tag", "__pid").agg(F.count("*").alias("__cnt"))
-    offsets = (
-        counts.alias("a")
-        .join(
-            counts.alias("b"),
-            (F.col("b.__tag") == F.col("a.__tag"))
-            & (F.col("b.__pid") < F.col("a.__pid")),
-            "left",
-        )
-        .groupBy(F.col("a.__tag").alias("__tag"), F.col("a.__pid").alias("__pid"))
-        .agg(F.coalesce(F.sum("b.__cnt"), F.lit(0)).alias("__offset"))
-    )
-    numbered = (
-        local.join(F.broadcast(offsets), ["__tag", "__pid"])
-        .withColumn("rn", (F.col("__lrn") + F.col("__offset")).cast("int"))
-        .select("__tag", "val", "rn")
-    )
-    return numbered
-
-
-def _tagged_to_columns(numbered: DataFrame, tags: list[str]) -> DataFrame:
-    """Pivot the (``__tag``, ``val``, ``rn``) rank table to one column
-    per tag in ONE aggregation pass (round 12). The previous assembly
-    filtered the ranked table once per tag and re-joined the three
-    single-tag frames with two full-outer joins on ``rn`` — five
-    consumers of the persisted rank subtree, each a separate cache
-    materialization + join stage (measured as ~9 near-idle 0.6 s
-    stages of report_summary's cold run). Because ``(tag, rn)`` is
-    unique, ``full_outer`` join on rn ≡ groupBy(rn) with one
-    conditional max per tag: identical rows, identical NULL padding,
-    one exchange."""
-    aggs = [
-        F.max(F.when(F.col("__tag") == tag, F.col("val"))).alias(tag)
-        for tag in tags
-    ]
-    return numbered.groupBy("rn").agg(*aggs)
 
 
 def report_summary(result: ReconcileResult, render: str = "compact") -> DataFrame:
@@ -244,33 +126,39 @@ def report_summary(result: ReconcileResult, render: str = "compact") -> DataFram
             F.concat_ws(":", F.col("id"), F.coalesce(F.col(c1).cast("string"), F.lit("NULL"))),
             F.coalesce(F.col(c2).cast("string"), F.lit("NULL")),
         )
-    c_m1 = f"missing_in_{result.db1}"
-    c_m2 = f"missing_in_{result.db2}"
-    numbered = _numbered_tagged(
-        {
-            "m1": result.missing_in_first.select(
-                F.col("id"), F.col("id").alias("val")
+    tagged = reduce(
+        DataFrame.unionByName,
+        [
+            result.missing_in_first.select(
+                F.lit("m1").alias("__tag"), "id", F.col("id").alias("val")
             ),
-            "m2": result.missing_in_second.select(
-                F.col("id"), F.col("id").alias("val")
+            result.missing_in_second.select(
+                F.lit("m2").alias("__tag"), "id", F.col("id").alias("val")
             ),
-            "dv": result.differing.select(F.col("id"), cell.alias("val")),
-        }
+            result.differing.select(F.lit("dv").alias("__tag"), "id", cell.alias("val")),
+        ],
     )
-    # one-pass pivot (see _tagged_to_columns): same rows as the old
-    # per-tag filter + two full-outer joins on rn, one exchange.
-    out = (
-        _tagged_to_columns(numbered, ["m1", "m2", "dv"])
-        .select(
-            F.col("m1").alias(c_m1),
-            F.col("m2").alias(c_m2),
-            F.col("dv").alias("differing_values"),
-            "rn",
+    columns = {
+        "m1": f"missing_in_{result.db1}",
+        "m2": f"missing_in_{result.db2}",
+        "dv": "differing_values",
+    }
+    # Pivot the (tag, val, rn) ranks to one column per list in ONE
+    # aggregation: ``(tag, rn)`` is unique, so groupBy(rn) with one
+    # conditional max per tag gives the rows and NULL padding of
+    # full-outer joins of the per-list frames on rn, in one exchange.
+    return (
+        grouped_row_number(tagged, "__tag", "id")
+        .groupBy("rn")
+        .agg(
+            *[
+                F.max(F.when(F.col("__tag") == tag, F.col("val"))).alias(name)
+                for tag, name in columns.items()
+            ]
         )
         .orderBy("rn")
         .drop("rn")
     )
-    return out
 
 
 def _py_repr(col):
@@ -296,21 +184,35 @@ def write_reports(
     and ``<prefix>_differing_values.csv`` (id-level detail, written
     only if non-empty — matching :288's emptiness guard).
 
+    Both files always describe the same run: when this run has no
+    differing values, a detail left under the same prefix by an
+    earlier run is deleted (through the path's Hadoop ``FileSystem``)
+    instead of surviving next to the fresh summary.
+
     ``single_file`` coalesces to one part for small parity outputs;
     at scale leave it False and get a directory of parts.
     """
     summary = report_summary(result, render=render)
     if single_file:
         summary = summary.coalesce(1)
-    summary.write.mode("overwrite").option("header", True).csv(output_prefix)
+    # The summary write counts the differing rows on the way out, so
+    # deciding whether to write the detail costs no extra job. Observed
+    # as the last transformation, above the orderBy: placed lower, the
+    # range-partition sampling jobs would also run the observed subtree.
+    seen = Observation()
+    summary.observe(seen, F.count("differing_values").alias("dv")).write.mode(
+        "overwrite"
+    ).option("header", True).csv(output_prefix)
 
+    detail_path = f"{output_prefix}_differing_values.csv"
+    if seen.get["dv"] == 0:
+        spark = result.differing.sparkSession
+        path = spark._jvm.org.apache.hadoop.fs.Path(detail_path)
+        path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
+        return
     c1 = f"{result.check_column}_{result.db1}"
     c2 = f"{result.check_column}_{result.db2}"
     detail = result.differing.select("id", c1, c2)
-    # head(1) is a cheap emptiness probe (reads at most one partition).
-    if detail.head(1):
-        if single_file:
-            detail = detail.coalesce(1)
-        detail.write.mode("overwrite").option("header", True).csv(
-            f"{output_prefix}_differing_values.csv"
-        )
+    if single_file:
+        detail = detail.coalesce(1)
+    detail.write.mode("overwrite").option("header", True).csv(detail_path)

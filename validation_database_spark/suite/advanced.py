@@ -9,7 +9,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..fixtures import pair_cte, validation_pair
 from ..sources import load_table
 from . import QuerySpec
 
@@ -220,29 +219,6 @@ SELECT o_orderstatus,
        ROUND(quantile_cont(o_totalprice, 0.99), 6) AS p99
 FROM orders GROUP BY o_orderstatus
 """
-
-
-# --- op-14: global sort ------------------------------------------------
-
-def q_sorted_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference sorts both frames by id before reporting
-    (running_validation.py:636-637). Global sort made value-checkable
-    by materializing the rank — computed with the scalable two-pass
-    global_row_number (range partition + local rank + offsets), not a
-    single-partition window."""
-    from ..operators.report import global_row_number
-
-    src_a, _ = validation_pair(spark, sf_dir, "string")
-    return global_row_number(src_a.select("id"), "id", rn_col="rank").withColumn(
-        "rank", F.col("rank").cast("bigint")
-    )
-
-
-ORACLE_SORTED_IDS = f"""
-{pair_cte("string")}
-SELECT id, row_number() OVER (ORDER BY id) AS rank FROM src_a
-"""
-
 
 
 # --- blocked fuzzy key join ---------------------------------------------
@@ -878,11 +854,11 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined back along the edges — linear in |E| with map-side combine,
     keys are the high-cardinality customer/part ids (no single-task
     window), hot parts are AQE-splittable. The final rank over the
-    part dimension is the two-pass distributed ``global_row_number``
-    (range-partition on (-auth2, p), local rank, tiny prefix offsets)
-    — no single-partition WindowExec even when the part dimension is
-    hundreds of millions of rows."""
-    from ..operators.report import global_row_number
+    part dimension is the two-pass distributed group-less
+    ``grouped_row_number`` (range-partition on (-auth2, p), local
+    rank, tiny prefix offsets) — no single-partition WindowExec even
+    when the part dimension is hundreds of millions of rows."""
+    from ..operators.report import grouped_row_number
 
     orders = load_table(spark, "orders", sf_dir).select("o_orderkey", "o_custkey")
     li = load_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_partkey")
@@ -898,11 +874,12 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     hub2 = e.join(auth1, "p").groupBy("c").agg(F.sum("a1").alias("h2"))
     auth2 = e.join(hub2, "c").groupBy("p").agg(F.sum("h2").alias("a2"))
     joined = auth1.join(auth2, "p").withColumn("__neg_a2", -F.col("a2"))
-    return global_row_number(joined, ["__neg_a2", "p"], rn_col="__rn").select(
+    ranked = grouped_row_number(joined, [], ["__neg_a2", "p"], rn_col="auth_rank")
+    return ranked.select(
         F.col("p").alias("partkey"),
         F.col("a1").cast("bigint").alias("auth1"),
         F.col("a2").cast("bigint").alias("auth2"),
-        F.col("__rn").cast("bigint").alias("auth_rank"),
+        "auth_rank",
     )
 
 
@@ -1058,9 +1035,6 @@ SPECS = [
               "blocked fuzzy key join: prefix blocking + levenshtein best-match"),
     # price_percentiles is driver-checked via order_status_profile
     # (suite/analytics.py); q_price_percentiles stays as the
-    # unit-tested operator surface.
-    # op-14 (global sort) is driver-checked via keys_projection's
-    # sort_rank column (suite/parity.py) — q_sorted_ids stays as the
     # unit-tested operator surface.
     # asof/range-join/regression rotated out of the driver window in
     # round 4 (driver-green since r2) — see UNIT_SPECS below.

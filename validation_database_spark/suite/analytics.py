@@ -883,21 +883,19 @@ def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape, rounded 6.
 
     Scale note: the rank over per-customer totals is the two-pass
-    distributed ``global_row_number`` (range-partition on
+    distributed group-less ``grouped_row_number`` (range-partition on
     ``(v, o_custkey)``, local rank, tiny prefix offsets) — the same
     shape as `keys_projection`'s sort_rank and `report_summary`'s
     pad rank, so no single-partition WindowExec touches the customer
     dimension at any scale."""
     from pyspark.sql import Window
 
-    from ..operators.report import global_row_number
+    from ..operators.report import grouped_row_number
 
     orders = load_table(spark, "orders", sf_dir)
     cents = F.round(F.col("o_totalprice") * 100).cast("bigint")
     per_cust = orders.groupBy("o_custkey").agg(F.sum(cents).alias("v"))
-    ranked = global_row_number(
-        per_cust, ["v", "o_custkey"], rn_col="__rn"
-    ).withColumn("i", F.col("__rn").cast("bigint")).drop("__rn")
+    ranked = grouped_row_number(per_cust, [], ["v", "o_custkey"], rn_col="i")
     tot = ranked.agg(
         F.count("*").alias("n"),
         F.sum("v").alias("sv"),

@@ -72,9 +72,9 @@ def q_keys_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite key with the NULL→'0' substitution, the reference's
     id/check/formatted_date select list, and the op-14 global sort
     materialized as ``sort_rank`` — computed with the scalable
-    two-pass global_row_number (range partition + local rank +
-    offsets), never a single-partition window."""
-    from ..operators.report import global_row_number
+    two-pass group-less grouped_row_number (range partition + local
+    rank + offsets), never a single-partition window."""
+    from ..operators.report import grouped_row_number
 
     orders = load_table(spark, "orders", sf_dir)
     nullable_cust = F.when(F.col("o_custkey") % 11 == 0, F.lit(None)).otherwise(
@@ -87,9 +87,7 @@ def q_keys_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderpriority").alias("check_col"),
         F.date_format("o_orderdate", "yyyy-MM-dd HH:mm:ss").alias("formatted_date"),
     )
-    return global_row_number(projected, "id", rn_col="sort_rank").withColumn(
-        "sort_rank", F.col("sort_rank").cast("bigint")
-    )
+    return grouped_row_number(projected, [], "id", rn_col="sort_rank")
 
 
 ORACLE_KEYS_PROJECTION = """

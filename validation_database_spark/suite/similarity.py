@@ -2877,14 +2877,16 @@ def _oracle_jl_projection() -> str:
         )
         + "]"
     )
+    # The matrix is bound ONCE in a one-row subquery: inlined into the
+    # lambdas, DuckDB rebuilds the 16×64 literal for every element.
     return f"""
 WITH proj AS (
   SELECT vec_id, embedding,
          list_transform(generate_series(1, {JL_OUT_DIM}), j ->
            ROUND(list_aggregate(list_transform(generate_series(1, {JL_IN_DIM}),
-             k -> embedding[k]::DOUBLE * ({mat})[j][k]), 'sum')
+             k -> embedding[k]::DOUBLE * jl.m[j][k]), 'sum')
            / sqrt(CAST({JL_OUT_DIM} AS DOUBLE)), 6)) AS y
-  FROM embeddings
+  FROM embeddings, (SELECT {mat} AS m) AS jl
 )
 SELECT vec_id,
        list_aggregate(list_transform(y, v -> format('{{:.6f}}', v)), 'string_agg', ',')

@@ -1804,13 +1804,16 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_ctes() -> str:
+    # Each merge step s{k} reads s{k-1} several times; DuckDB inlines a
+    # plain CTE at every reference, so without MATERIALIZED the steps
+    # recompute each other (the encode oracle ran 89 s instead of 0.2 s).
     ctes = [
         f"""w AS (
   SELECT word, count(*) AS wf FROM (
     SELECT unnest({_tokens_sql('text')}) AS word FROM documents
   ) WHERE len(word) <= {BPE_MAX_WORD} GROUP BY word
 ),
-s0 AS (SELECT word, wf, string_split(word, '') AS syms FROM w)"""
+s0 AS MATERIALIZED (SELECT word, wf, string_split(word, '') AS syms FROM w)"""
     ]
     for k in range(1, BPE_STEPS + 1):
         prev = f"s{k - 1}"
@@ -1822,7 +1825,7 @@ s0 AS (SELECT word, wf, string_split(word, '') AS syms FROM w)"""
 pc{k} AS (SELECT pr.pa AS pa, pr.pb AS pb, CAST(sum(wf) AS BIGINT) AS cnt
           FROM pr{k} GROUP BY 1, 2),
 best{k} AS (SELECT pa, pb, cnt FROM pc{k} ORDER BY cnt DESC, pa, pb LIMIT 1),
-s{k} AS (
+s{k} AS MATERIALIZED (
   WITH RECURSIVE r{k} AS (
     SELECT word, wf, 1 AS i, [syms[1]] AS acc FROM {prev}
     UNION ALL
