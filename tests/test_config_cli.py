@@ -66,6 +66,102 @@ def test_clean_run_removes_stale_detail(spark, tmp_path):
     assert summary.count() == 0
 
 
+def _summary_and_detail(spark, prefix):
+    """(summary rows, detail rows or None) read back from the CSVs."""
+    summary = spark.read.option("header", True).csv(prefix)
+    detail_path = prefix + "_differing_values.csv"
+    detail = None
+    if os.path.exists(detail_path):
+        detail = sorted(tuple(r) for r in spark.read.option("header", True).csv(detail_path).collect())
+    return sorted(tuple(r) for r in summary.collect()), detail
+
+
+def test_rewritten_source_gets_a_fresh_report(spark, tmp_path):
+    """Runs in one process over the same source paths report what the
+    files hold at each run: no cached rows of an earlier run reach a
+    later report, and the runs leave nothing cached behind."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from validation_database_spark import util
+
+    # start from an empty CacheManager so the final check sees only
+    # what these runs leave behind
+    util.release_pins()
+    spark.catalog.clearCache()
+
+    def write(db, rows):
+        os.makedirs(tmp_path / db, exist_ok=True)
+        table = pa.table({"k": [k for k, _ in rows], "c": [c for _, c in rows]})
+        pq.write_table(table, str(tmp_path / db / "t.parquet"))
+
+    prefix = str(tmp_path / "report.csv")
+    cfg = {
+        "databases": ["a", "b"],
+        "data_type": "string",
+        "check_column": "c",
+        "unique_key": ["k"],
+        "a_table_name": "t",
+        "b_table_name": "t",
+        "a_source": {"format": "parquet", "path": str(tmp_path / "a")},
+        "b_source": {"format": "parquet", "path": str(tmp_path / "b")},
+        "output": prefix,
+    }
+    write("a", [(1, "x"), (2, "y")])
+    dirty = [(1, "x"), (2, "z")]
+    dirty_report = (
+        [(None, None, "{'id': '2', 'c_a': 'y', 'c_b': 'z'}")],
+        [("2", "y", "z")],
+    )
+    clean = [(1, "x"), (2, "y"), (3, "w")]
+    clean_report = ([("3", None, None)], None)
+    for b_rows, report in [(dirty, dirty_report), (clean, clean_report)] * 2 + [(dirty, dirty_report)]:
+        write("b", b_rows)
+        run_validation(spark, cfg)
+        assert _summary_and_detail(spark, prefix) == report
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert not util._PINNED
+
+
+def test_log_counts_come_from_the_report_write(spark, tmp_path, monkeypatch):
+    """With an output, the logged counts cost no count() job: they are
+    the report write's own per-list counts, and a NULL id (whose summary
+    cell is empty) still counts as a missing row."""
+    first = spark.createDataFrame(
+        [("1", "x"), ("2", "y"), ("3", "y"), ("4", "q")], "id string, check_col string"
+    )
+    second = spark.createDataFrame(
+        [("1", "x"), ("2", "z"), ("3", "w"), (None, "n"), ("5", "v")],
+        "id string, check_col string",
+    )
+    first.createOrReplaceTempView("log_counts_left")
+    second.createOrReplaceTempView("log_counts_right")
+    cfg = {
+        "databases": ["left", "right"],
+        "data_type": "string",
+        "check_column": "check_col",
+        "is_using_manual_queries": True,
+        "queries": {
+            "first_query": "SELECT * FROM log_counts_left",
+            "second_query": "SELECT * FROM log_counts_right",
+        },
+        "output": str(tmp_path / "report.csv"),
+        "log_directory": str(tmp_path / "logs"),
+        "log_counts": True,
+    }
+
+    def no_count(self):
+        raise AssertionError("count() job with an output set")
+
+    monkeypatch.setattr(type(first), "count", no_count)
+    run = run_validation(spark, cfg)
+    assert run.counts == {"m1": 2, "m2": 1, "dv": 2}
+    text = open(run.log_path).read()
+    for line in ("IDs Missing in left: 2", "IDs Missing in right: 1", "Differing values: 2"):
+        assert line in text
+    assert text.index("result saved under") < text.index("IDs Missing in left")
+
+
 def test_exactly_two_sources_enforced(spark, sf_dir, tmp_path):
     cfg = _base_config(sf_dir, tmp_path)
     cfg["databases"] = ["a", "b", "c"]

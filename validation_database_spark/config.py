@@ -216,6 +216,19 @@ class ValidationRun:
     result: ReconcileResult
     output: str | None
     log_path: str | None = None
+    # list lengths {"m1", "m2", "dv"}: from the report write when
+    # ``output`` is set, else only when ``log_counts`` asked for them
+    counts: dict[str, int] | None = None
+
+
+def _count_results(result: ReconcileResult) -> dict[str, int]:
+    """The three list lengths by one ``count()`` job each — for runs
+    without a report write, whose ``Observation`` counts them free."""
+    return {
+        "m1": result.missing_in_first.count(),
+        "m2": result.missing_in_second.count(),
+        "dv": result.differing.count(),
+    }
 
 
 def run_validation(spark: SparkSession, config: dict[str, Any]) -> ValidationRun:
@@ -229,7 +242,9 @@ def run_validation(spark: SparkSession, config: dict[str, Any]) -> ValidationRun
     redacted, validation phases, report writes. Stage lines do NOT
     force extra Spark jobs (the DAG stays lazy); set
     ``log_counts: true`` to also log the three result counts the
-    reference's eager pandas run printed (costs one extra job each).
+    reference's eager pandas run printed. With ``output`` set they come
+    from the report write at no extra job and are logged after it;
+    without, each costs one ``count()`` job.
     """
     from .observability import NullLogger, make_run_logger, redact
 
@@ -269,17 +284,21 @@ def run_validation(spark: SparkSession, config: dict[str, Any]) -> ValidationRun
         threshold=float(config.get("threshold", 1.0)),
     )
     log.info("Processing Validate Missing Ids Done.")
-    if config.get("log_counts"):
-        log.info(f"IDs Missing in {db1}: {result.missing_in_first.count()}")
-        log.info(f"IDs Missing in {db2}: {result.missing_in_second.count()}")
-        log.info(f"Differing values: {result.differing.count()}")
     log.info("Processing Validate Data Done")
     output = config.get("output")
+    counts = None
     if output:
         log.info("saving result to csv file ........")
-        write_reports(result, output, single_file=bool(config.get("single_file", True)))
+        counts = write_reports(
+            result, output, single_file=bool(config.get("single_file", True))
+        )
         log.info(f"result saved under {output}")
-    return ValidationRun(result, output, getattr(log, "log_path", None))
+    if config.get("log_counts"):
+        counts = counts or _count_results(result)
+        log.info(f"IDs Missing in {db1}: {counts['m1']}")
+        log.info(f"IDs Missing in {db2}: {counts['m2']}")
+        log.info(f"Differing values: {counts['dv']}")
+    return ValidationRun(result, output, getattr(log, "log_path", None), counts)
 
 
 def main(argv: list[str] | None = None) -> int:
@@ -299,11 +318,10 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="validation_database_spark")
     run = run_validation(spark, config)
     r = run.result
-    n1 = r.missing_in_first.count()
-    n2 = r.missing_in_second.count()
-    nd = r.differing.count()
+    counts = run.counts or _count_results(r)
     print(
-        f"missing in {r.db1}: {n1}; missing in {r.db2}: {n2}; differing: {nd}"
+        f"missing in {r.db1}: {counts['m1']}; missing in {r.db2}: {counts['m2']}; "
+        f"differing: {counts['dv']}"
         + (f"; reports under {run.output}" if run.output else "")
     )
     return 0

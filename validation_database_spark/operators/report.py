@@ -18,6 +18,14 @@ by a list tag; with no group columns the helper is the global rank
 the suite's sort-rank queries use. The three result DataFrames remain
 the primary (unbounded) API; ``report_summary`` is the
 presentation-compat sink on top.
+
+Both sinks start from one table: ``_discrepancies`` unions the three
+lists into tagged rows ``(__tag, id, val, c1, c2)``. ``report_summary``
+ranks and pivots its ``(__tag, id, val)`` columns; ``write_reports``
+stages (pins) that table once per call, writes the summary and the
+detail from the staged rows, and releases the pins before it returns
+(``util.pin_scope``), so a write re-runs no part of the reconcile
+lineage and leaves nothing cached.
 """
 
 from __future__ import annotations
@@ -27,8 +35,11 @@ from functools import reduce
 from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from ..util import pin
+from ..util import pin, pin_scope
 from .reconcile import ReconcileResult
+
+_TAGS = ("m1", "m2", "dv")
+_PRESENCE = tuple(f"__{tag}" for tag in _TAGS)
 
 
 def grouped_row_number(
@@ -96,21 +107,12 @@ def grouped_row_number(
     )
 
 
-def report_summary(result: ReconcileResult, render: str = "compact") -> DataFrame:
-    """Side-by-side ragged summary.
-
-    Columns: ``missing_in_{db1}``, ``missing_in_{db2}``,
-    ``differing_values``; row i holds the i-th element of each list (or
-    NULL past that list's end) — the distributed equivalent of the
-    reference's pad-with-None assembly (running_validation.py:262-275).
-
-    ``render`` controls the differing cell:
-    - ``"compact"``: ``id:left|right`` — deterministic across engines
-      (used by the DuckDB oracle cross-check).
-    - ``"dict"``: the reference's ``{'id': …, 'a': …, 'b': …}`` python
-      dict repr (running_validation.py:256-259) for byte-parity with
-      the golden CSV.
-    """
+def _discrepancies(result: ReconcileResult, render: str) -> DataFrame:
+    """The run's tagged discrepancy rows ``(__tag, id, val, c1, c2)``:
+    ``m1``/``m2`` rows carry the missing id as ``val`` and typed NULL
+    check values, ``dv`` rows the rendered cell (see ``report_summary``)
+    and the two check values. Both CSV reports derive from this one
+    table."""
     c1 = f"{result.check_column}_{result.db1}"
     c2 = f"{result.check_column}_{result.db2}"
     if render == "dict":
@@ -126,23 +128,30 @@ def report_summary(result: ReconcileResult, render: str = "compact") -> DataFram
             F.concat_ws(":", F.col("id"), F.coalesce(F.col(c1).cast("string"), F.lit("NULL"))),
             F.coalesce(F.col(c2).cast("string"), F.lit("NULL")),
         )
-    tagged = reduce(
+    types = result.differing.schema
+    no_values = [F.lit(None).cast(types[c].dataType).alias(c) for c in (c1, c2)]
+    return reduce(
         DataFrame.unionByName,
         [
             result.missing_in_first.select(
-                F.lit("m1").alias("__tag"), "id", F.col("id").alias("val")
+                F.lit("m1").alias("__tag"), "id", F.col("id").alias("val"), *no_values
             ),
             result.missing_in_second.select(
-                F.lit("m2").alias("__tag"), "id", F.col("id").alias("val")
+                F.lit("m2").alias("__tag"), "id", F.col("id").alias("val"), *no_values
             ),
-            result.differing.select(F.lit("dv").alias("__tag"), "id", cell.alias("val")),
+            result.differing.select(
+                F.lit("dv").alias("__tag"), "id", cell.alias("val"), c1, c2
+            ),
         ],
     )
-    columns = {
-        "m1": f"missing_in_{result.db1}",
-        "m2": f"missing_in_{result.db2}",
-        "dv": "differing_values",
-    }
+
+
+def _ranked_pivot(tagged: DataFrame, result: ReconcileResult) -> DataFrame:
+    """Rank ``(__tag, id, val)`` rows per tag and pivot the ranks to the
+    summary's three columns, plus a 0/1 ``__<tag>`` presence column per
+    tag: a list's length is the sum of its presence column, which a
+    count of its cells misses when an id (and so the cell) is NULL."""
+    names = (f"missing_in_{result.db1}", f"missing_in_{result.db2}", "differing_values")
     # Pivot the (tag, val, rn) ranks to one column per list in ONE
     # aggregation: ``(tag, rn)`` is unique, so groupBy(rn) with one
     # conditional max per tag gives the rows and NULL padding of
@@ -153,12 +162,35 @@ def report_summary(result: ReconcileResult, render: str = "compact") -> DataFram
         .agg(
             *[
                 F.max(F.when(F.col("__tag") == tag, F.col("val"))).alias(name)
-                for tag, name in columns.items()
-            ]
+                for tag, name in zip(_TAGS, names)
+            ],
+            *[
+                F.max((F.col("__tag") == tag).cast("int")).alias(presence)
+                for tag, presence in zip(_TAGS, _PRESENCE)
+            ],
         )
         .orderBy("rn")
         .drop("rn")
     )
+
+
+def report_summary(result: ReconcileResult, render: str = "compact") -> DataFrame:
+    """Side-by-side ragged summary.
+
+    Columns: ``missing_in_{db1}``, ``missing_in_{db2}``,
+    ``differing_values``; row i holds the i-th element of each list (or
+    NULL past that list's end) — the distributed equivalent of the
+    reference's pad-with-None assembly (running_validation.py:262-275).
+
+    ``render`` controls the differing cell:
+    - ``"compact"``: ``id:left|right`` — deterministic across engines
+      (used by the DuckDB oracle cross-check).
+    - ``"dict"``: the reference's ``{'id': …, 'a': …, 'b': …}`` python
+      dict repr (running_validation.py:256-259) for byte-parity with
+      the golden CSV.
+    """
+    tagged = _discrepancies(result, render).select("__tag", "id", "val")
+    return _ranked_pivot(tagged, result).drop(*_PRESENCE)
 
 
 def _py_repr(col):
@@ -178,11 +210,22 @@ def write_reports(
     *,
     single_file: bool = False,
     render: str = "dict",
-) -> None:
+) -> dict[str, int]:
     """CSV sinks mirroring the reference's two files
     (running_validation.py:283,:288-293): ``<prefix>`` (padded summary)
     and ``<prefix>_differing_values.csv`` (id-level detail, written
-    only if non-empty — matching :288's emptiness guard).
+    only if non-empty — matching :288's emptiness guard). Returns the
+    three list lengths, ``{"m1": …, "m2": …, "dv": …}``, counted by the
+    summary write itself.
+
+    Both files derive from ONE staged table, the run's tagged
+    discrepancy rows, pinned for the duration of the call: the
+    summary's range sampling, its exchange and the detail write read
+    the cache, so the reconcile lineage (source scans, joins, the fuzzy
+    UDF) runs once per call instead of once per job. The call runs in
+    a ``pin_scope``, so the staged table and the rank pin are
+    unpersisted before it returns and no later run over the same
+    source paths can be served these rows.
 
     Both files always describe the same run: when this run has no
     differing values, a detail left under the same prefix by an
@@ -192,27 +235,36 @@ def write_reports(
     ``single_file`` coalesces to one part for small parity outputs;
     at scale leave it False and get a directory of parts.
     """
-    summary = report_summary(result, render=render)
-    if single_file:
-        summary = summary.coalesce(1)
-    # The summary write counts the differing rows on the way out, so
-    # deciding whether to write the detail costs no extra job. Observed
-    # as the last transformation, above the orderBy: placed lower, the
-    # range-partition sampling jobs would also run the observed subtree.
-    seen = Observation()
-    summary.observe(seen, F.count("differing_values").alias("dv")).write.mode(
-        "overwrite"
-    ).option("header", True).csv(output_prefix)
+    with pin_scope():
+        staged = pin(_discrepancies(result, render))
+        summary = _ranked_pivot(staged.select("__tag", "id", "val"), result)
+        if single_file:
+            summary = summary.coalesce(1)
+        # The summary write counts each list on the way out, so the
+        # detail decision and the caller's counts cost no extra job.
+        # Observed as the last transformation, above the orderBy:
+        # placed lower, the range-partition sampling jobs would also
+        # run the observed subtree. Only the presence columns' drop
+        # follows it.
+        seen = Observation()
+        observed = summary.observe(
+            seen, *[F.sum(c).alias(tag) for tag, c in zip(_TAGS, _PRESENCE)]
+        )
+        observed.drop(*_PRESENCE).write.mode("overwrite").option(
+            "header", True
+        ).csv(output_prefix)
+        counts = {tag: int(n or 0) for tag, n in seen.get.items()}
 
-    detail_path = f"{output_prefix}_differing_values.csv"
-    if seen.get["dv"] == 0:
-        spark = result.differing.sparkSession
-        path = spark._jvm.org.apache.hadoop.fs.Path(detail_path)
-        path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
-        return
-    c1 = f"{result.check_column}_{result.db1}"
-    c2 = f"{result.check_column}_{result.db2}"
-    detail = result.differing.select("id", c1, c2)
-    if single_file:
-        detail = detail.coalesce(1)
-    detail.write.mode("overwrite").option("header", True).csv(detail_path)
+        detail_path = f"{output_prefix}_differing_values.csv"
+        if counts["dv"] == 0:
+            spark = result.differing.sparkSession
+            path = spark._jvm.org.apache.hadoop.fs.Path(detail_path)
+            path.getFileSystem(spark._jsc.hadoopConfiguration()).delete(path, True)
+            return counts
+        c1 = f"{result.check_column}_{result.db1}"
+        c2 = f"{result.check_column}_{result.db2}"
+        detail = staged.filter(F.col("__tag") == "dv").select("id", c1, c2)
+        if single_file:
+            detail = detail.coalesce(1)
+        detail.write.mode("overwrite").option("header", True).csv(detail_path)
+        return counts

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Iterator
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 
 
@@ -23,23 +27,52 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
 
 # Persisted frames registered by operators that NEED the cache to
 # survive until the caller materializes the result — either for
-# partition-assignment determinism (the two-pass rank helpers in
+# partition-assignment determinism (the two-pass rank helper in
 # operators/report.py) or because a reused/iterated subtree would
 # otherwise replicate in the plan (SemDeDup's Lloyd assignments).
-# Spark's CacheManager keys by logical plan and never GCs, so a long
-# session accumulates these without an explicit release; bench.py and
-# scripts/scale100.py call release_pins() between specs (ADVICE r6).
+# Spark's CacheManager keys by logical plan and never GCs, so a pin
+# that outlives its run also serves a LATER run over the same paths
+# its cached rows, even after the files under those paths changed.
+# Two lifetimes:
+# - inside ``with pin_scope():`` a pin belongs to the innermost scope
+#   of the calling thread and is unpersisted when that scope exits
+#   (``write_reports`` runs inside one, so a validation run leaves no
+#   cache behind and releases no other thread's or caller's pins —
+#   unless they pinned the identical plan, which shares one cache
+#   entry);
+# - outside any scope it goes to the process-global ``_PINNED`` list
+#   until the host calls release_pins() (bench.py, perfbench and the
+#   scripts call it between specs, ADVICE r6).
 _PINNED: list[DataFrame] = []
+_SCOPES = threading.local()
 
 
 def pin(df: DataFrame) -> DataFrame:
-    """persist() + register for the next release_pins()."""
+    """persist() + register with the innermost ``pin_scope`` of this
+    thread, or for the next release_pins() outside any scope."""
     df.persist()
-    _PINNED.append(df)
+    scopes = getattr(_SCOPES, "stack", None)
+    (scopes[-1] if scopes else _PINNED).append(df)
     return df
 
 
 def release_pins() -> None:
-    """Unpersist every frame pinned since the last call."""
+    """Unpersist every frame pinned outside a scope since the last call."""
     while _PINNED:
         _PINNED.pop().unpersist(False)
+
+
+@contextmanager
+def pin_scope() -> Iterator[None]:
+    """Unpersist, on exit, every frame ``pin()`` registered in this
+    thread while the scope was the innermost one."""
+    if not hasattr(_SCOPES, "stack"):
+        _SCOPES.stack = []
+    mine: list[DataFrame] = []
+    _SCOPES.stack.append(mine)
+    try:
+        yield
+    finally:
+        _SCOPES.stack.pop()
+        while mine:
+            mine.pop().unpersist(False)
