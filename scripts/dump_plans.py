@@ -26,24 +26,27 @@ SHOWCASE = {
     "the 25-row nation dim",
     "dedup_minhash_lsh": "shingle index → 16 min-hash aggregates in one pass "
     "→ band self-join (bucket-bounded) → exact-Jaccard verify",
-    "ann_topk": "tagged union: brute-force exact baseline + IVF (since "
-    "round 12 the per-vector argmax is ROW-LOCAL — the ≤nlist centroid "
-    "table folds to one broadcast array row and each vector computes "
-    "array_max(transform(...)) in a projection; no crossJoin row "
-    "materialization, no aggregation, no rank window — the r4 OOM fix "
-    "made strictly narrower). Since round 11 the scored fan-out runs in a "
-    "salted, REPARTITION_BY_NUM-pinned layout (ANN_FLOAT_PARTS wide, AQE "
-    "cannot coalesce it) so the partial-WindowGroupLimit sort slabs stay "
-    "bounded — the r10 2M-vector DNF was this stage inheriting its small "
-    "join inputs' 22 AQE-coalesced partitions. Serving scale is still the "
-    "quant twin (unit_ann_ivf_quant)",
+    "ann_topk": "tagged union: brute-force exact baseline + IVF, built "
+    "from the float steps of operators/ivf.py — the per-vector argmax is "
+    "ROW-LOCAL (the ≤nlist centroid table folds to one broadcast array "
+    "row and each vector computes array_max(transform(...)) in a "
+    "projection; no crossJoin row materialization, no aggregation, no "
+    "rank window), and the scored fan-out runs in a salted, "
+    "REPARTITION_BY_NUM-pinned layout sized from the corpus row count "
+    "(ann_float_layout; AQE cannot coalesce it) so the "
+    "partial-WindowGroupLimit sort slabs stay bounded — the r10 "
+    "2M-vector DNF was this stage inheriting its small join inputs' 22 "
+    "AQE-coalesced partitions. Serving scale is still the quant twin "
+    "(unit_ann_ivf_quant)",
     "doc_profile": "one-scan text profiling: tokens/quality/lang-id/"
     "fingerprint/repetition/simhash as narrow projections + one unigram-LM "
     "groupBy joined back broadcast",
     "rag_retrieval": "IVF-served RAG retrieval, e6-integer-dot serving form "
-    "(headline since round 10): assignment + probing are single MapInPandas "
-    "passes against the closure-held centroid table (no crossJoin fan-out, "
-    "no hash-agg), pair scoring a salted cogrouped-by-cell "
+    "(headline since round 10), built from the e6 steps of operators/ivf.py: "
+    "assignment + probing are single MapInPandas passes "
+    "(topk_cells_explode) against the closure-held centroid table (no "
+    "crossJoin fan-out, no hash-agg), pair scoring (score_e6) a salted "
+    "cogrouped-by-cell "
     "FlatMapCoGroupsInPandas int64 matmul — vectors cross Arrow once per "
     "assignment, never per pair; the salt bounds each cell's "
     "single-record-batch group against Zipfian cell skew, and each slice "

@@ -301,14 +301,14 @@ def test_ann_float_salt_is_value_neutral(spark, sf_dir, monkeypatch):
     matches on exactly one salt value and the scored set, scores, and
     tie-breaks are unchanged. Pin the result set identical across
     salt 1 (the unsalted shape), the default, and 3, under a
-    different partition count."""
+    different partition count (layouts forced through
+    ``ann_float_layout``)."""
     from validation_database_spark.suite import similarity as S
 
     base = sorted(map(tuple, S.q_ann_ivf_cosine(spark, sf_dir).collect()))
-    monkeypatch.setattr(S, "ANN_FLOAT_SALT", 1)
-    monkeypatch.setattr(S, "ANN_FLOAT_PARTS", 5)
+    monkeypatch.setattr(S, "ann_float_layout", lambda n: (1, 5))
     one = sorted(map(tuple, S.q_ann_ivf_cosine(spark, sf_dir).collect()))
-    monkeypatch.setattr(S, "ANN_FLOAT_SALT", 3)
+    monkeypatch.setattr(S, "ann_float_layout", lambda n: (3, 5))
     three = sorted(map(tuple, S.q_ann_ivf_cosine(spark, sf_dir).collect()))
     assert base == one == three
 

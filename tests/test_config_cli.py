@@ -187,6 +187,67 @@ def test_bad_config_value_names_the_key(spark, sf_dir, tmp_path, key, value):
         run_validation(spark, cfg)
 
 
+@pytest.mark.parametrize(
+    "key, value, missing",
+    [
+        ("unique_key", ["o_orderkey", "o_nokey"], "o_nokey"),
+        ("check_column", "o_nocheck", "o_nocheck"),
+        ("dbB_database_date_column", "o_nodate", "o_nodate"),
+    ],
+)
+def test_missing_source_column_names_source_and_column(
+    spark, sf_dir, tmp_path, key, value, missing
+):
+    """A configured key, check or date column absent from a source
+    raises a ValueError naming the source, the column and the columns
+    it does have — read from the schema, before any Spark job."""
+    cfg = _base_config(sf_dir, tmp_path)
+    cfg.update({key: value, "start_date": "1995-01-01", "end_date": "1996-01-01"})
+    jobs = spark.sparkContext.statusTracker()
+    spark.sparkContext.setJobGroup("missing-column", "missing-column")
+    try:
+        with pytest.raises(ValueError, match=f"'{missing}'") as err:
+            run_validation(spark, cfg)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    msg = str(err.value)
+    failing = "dbB" if key.startswith("dbB") else "dbA"
+    assert failing in msg
+    assert "o_orderpriority" in msg and "o_custkey" in msg
+    # no job beyond the schema reads of the sources loaded so far
+    # (spark.read.parquet runs at most two per source)
+    loaded = 2 if failing == "dbB" else 1
+    assert len(jobs.getJobIdsForGroup("missing-column")) <= 2 * loaded
+
+
+_ID = "CAST(o_orderkey AS STRING)"
+
+
+@pytest.mark.parametrize(
+    "query, missing",
+    [
+        (f"SELECT {_ID} AS oid, o_orderpriority AS check_col FROM orders", "id"),
+        (f"SELECT {_ID} AS id, o_orderpriority FROM orders", "check_col"),
+    ],
+    ids=["no-id", "no-check"],
+)
+def test_manual_query_missing_column_names_the_query(spark, sf_dir, query, missing):
+    """Manual-queries mode: each query must return ``id`` and the
+    check column; a missing one is named with the query's source."""
+    register_views(spark, sf_dir)
+    ok = f"SELECT {_ID} AS id, o_orderpriority AS check_col FROM orders"
+    cfg = {
+        "databases": ["left", "right"],
+        "data_type": "string",
+        "check_column": "check_col",
+        "is_using_manual_queries": True,
+        "queries": {"first_query": ok, "second_query": query},
+    }
+    with pytest.raises(ValueError, match=f"'{missing}'") as err:
+        run_validation(spark, cfg)
+    assert "right (queries.second_query)" in str(err.value)
+
+
 def test_date_range_filter_applied(spark, sf_dir, tmp_path):
     cfg = _base_config(sf_dir, tmp_path)
     cfg.update(

@@ -3,6 +3,7 @@ corpus — operators must degrade gracefully, not throw."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from validation_database_spark.operators import dedup as D
@@ -90,7 +91,7 @@ def test_ann_quant_degenerate_centroid_dropped_like_oracle(spark, tmp_path):
     element goes null) must be dropped by BOTH engines the same way.
     Pre-fix the oracle's null-filtered uq CTE silently dropped it
     while the Spark side's collected centroid table crashed
-    _topk_cells_explode's int64 np.array build with a TypeError.
+    the e6 cell selector's int64 np.array build with a TypeError.
     Fixtures never produce the case, so pin it on a synthetic table
     with vec_id=7 (a centroid id) carrying a null element."""
     from validation_database_spark.suite import _collect_all
@@ -110,54 +111,88 @@ def test_ann_quant_degenerate_centroid_dropped_like_oracle(spark, tmp_path):
     assert_matches_oracle(spark, _collect_all()["unit_ann_ivf_quant"], sf)
 
 
-def test_ann_quant_score_cogroup_empty_sides():
-    """The round-10 ANN cogroup scorer must return a typed empty
-    frame when either cogroup side is empty (Spark invokes the
-    function for keys present on only one side)."""
+_KERNEL_SHAPES = {
+    # ANN: one cell per vector, keyed by vec_id
+    "vec_id": dict(
+        ids=("vec_id",), query="query_id", score="s_e12",
+        rows={"vec_id": [1, 2], "x": [[1, 0], [0, 1]]},
+        probes={"query_id": [9], "qx": [[1, 1]]},
+        self_probe={"query_id": [1], "qx": [[5, 5]]},
+    ),
+    # RAG: chunks indexed in several cells, keyed by (doc_id, chunk_idx),
+    # with the best-reachable-cell mask (cells / arn / probed)
+    "doc_chunk": dict(
+        ids=("doc_id", "chunk_idx"), query="query_doc_id", score="sim_e12",
+        rows={"doc_id": [1, 2], "chunk_idx": [0, 0], "x": [[1, 0], [0, 1]],
+              "cells": [[7, 8], [7, 8]], "arn": [0, 0]},
+        probes={"query_doc_id": [9], "qx": [[1, 1]], "probed": [[7]]},
+        self_probe={"query_doc_id": [1], "qx": [[5, 5]], "probed": [[7]]},
+    ),
+}
+
+
+@pytest.mark.parametrize("shape", sorted(_KERNEL_SHAPES))
+def test_ann_quant_score_cogroup_empty_sides(shape):
+    """The cogroup scorer must return a typed empty frame when either
+    cogroup side is empty (Spark invokes the function for keys present
+    on only one side) — for both key shapes the one kernel serves."""
     import numpy as np
     import pandas as pd
 
-    from validation_database_spark.suite.similarity import (
-        _ann_quant_score_cogroup,
-    )
+    from validation_database_spark.operators.ivf import cell_kernel
 
-    vecs = pd.DataFrame(
-        {"vec_id": [1, 2], "x": [[1, 0], [0, 1]], "cent_id": [7, 7],
-         "__salt": [0, 0]}
-    )
-    probes = pd.DataFrame(
-        {"query_id": [9], "qx": [[1, 1]], "cent_id": [7], "__salt": [0]}
-    )
+    spec = _KERNEL_SHAPES[shape]
+    cols = [spec["query"], *spec["ids"], spec["score"]]
+    kernel = cell_kernel(spec["ids"], spec["query"], spec["score"], 10)
+    key = {"cent_id": 7, "__salt": 0}
+    vecs = pd.DataFrame(spec["rows"]).assign(**key)
+    probes = pd.DataFrame(spec["probes"]).assign(**key)
     empty_v = vecs.iloc[0:0]
     empty_p = probes.iloc[0:0]
     for a, b in ((empty_v, probes), (vecs, empty_p), (empty_v, empty_p)):
-        out = _ann_quant_score_cogroup(a, b)
-        assert list(out.columns) == ["query_id", "vec_id", "s_e12"]
+        out = kernel(a, b)
+        assert list(out.columns) == cols
         assert len(out) == 0
-        assert out["s_e12"].dtype == np.int64
-    # non-empty sanity: own-vector exclusion + exact integer dots
-    full = _ann_quant_score_cogroup(vecs, probes)
-    assert sorted(map(tuple, full.to_numpy())) == [(9, 1, 1), (9, 2, 1)]
-    self_probe = pd.DataFrame(
-        {"query_id": [1], "qx": [[5, 5]], "cent_id": [7], "__salt": [0]}
-    )
-    out = _ann_quant_score_cogroup(vecs, self_probe)
-    # vec 1 == query 1 masked; only vec 2 scored
-    assert sorted(map(tuple, out.to_numpy())) == [(1, 2, 5)]
+        assert out[spec["score"]].dtype == np.int64
+    # non-empty sanity: own-row exclusion + exact integer dots
+    pad = (0,) * (len(spec["ids"]) - 1)
+    full = kernel(vecs, probes)
+    assert sorted(map(tuple, full.to_numpy())) == [(9, 1, *pad, 1), (9, 2, *pad, 1)]
+    out = kernel(vecs, pd.DataFrame(spec["self_probe"]).assign(**key))
+    # row 1 == query 1 masked; only row 2 scored
+    assert sorted(map(tuple, out.to_numpy())) == [(1, 2, *pad, 5)]
+
+
+def test_cell_kernel_scores_a_twice_reachable_chunk_once():
+    """A chunk indexed in cells 7 (its best) and 8, probed through both
+    by one query, meets that query in both cells' cogroup groups; the
+    best-reachable-cell mask keeps the pair in cell 7 only."""
+    import pandas as pd
+
+    from validation_database_spark.operators.ivf import cell_kernel
+
+    kernel = cell_kernel(("doc_id", "chunk_idx"), "query_doc_id", "sim_e12", 3)
+    probes = {"query_doc_id": [9], "qx": [[1, 1]], "probed": [[8, 7]], "__salt": [0]}
+    out = []
+    for arn, cell in enumerate((7, 8)):
+        chunk = pd.DataFrame(
+            {"doc_id": [1], "chunk_idx": [4], "x": [[2, 3]], "cells": [[7, 8]],
+             "arn": [arn], "cent_id": [cell], "__salt": [0]}
+        )
+        got = kernel(chunk, pd.DataFrame({**probes, "cent_id": [cell]}))
+        out += [(cell, *row) for row in got.itertuples(index=False)]
+    assert out == [(7, 9, 1, 4, 5)]
 
 
 def test_topk_cells_explode_empty_centroids(spark):
     """k=0 effective centroid table (empty corpus sample) must yield
     an empty result, not a numpy reduction crash — mirrors the
     empty-seed routing rule of the hier kernel (ADVICE r8)."""
-    from validation_database_spark.suite.similarity import (
-        _topk_cells_explode,
-    )
+    from validation_database_spark.operators.ivf import topk_cells_explode
 
     df = spark.createDataFrame(
         [(1, [1, 2]), (2, [3, 4])], "vec_id long, x array<bigint>"
     )
-    out = _topk_cells_explode(df, "x", [], "cent_id", "cx", 2,
-                              keep_cells=False)
+    out = topk_cells_explode(df, "x", [], 2)
     assert out.count() == 0
     assert out.columns == ["vec_id", "x", "cent_id"]

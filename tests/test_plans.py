@@ -290,9 +290,10 @@ def test_ivf_float_fanout_layout_is_pinned(spark, sf_dir):
     """VERDICT r10 ask #1: the float IVF arm's scored fan-out must
     run in the EXPLICITLY-partitioned salted layout — a
     REPARTITION_BY_NUM exchange on (cent_id, __salt) that AQE cannot
-    coalesce below ANN_FLOAT_PARTS (the round-10 2M-replica DNF was
-    this stage inheriting its small join inputs' 22 AQE-coalesced
-    partitions and sorting 3.21B fan-out rows as ~146M-row slabs) —
+    coalesce below the ann_float_layout partition count (the
+    round-10 2M-replica DNF was this stage inheriting its small join
+    inputs' 22 AQE-coalesced partitions and sorting 3.21B fan-out
+    rows as ~146M-row slabs) —
     and its final per-query rank window must keep the map-side
     partial WindowGroupLimit so only top-K per query per task
     reaches the exchange."""
@@ -1122,11 +1123,11 @@ def test_sql_string_builders_same_semantics_r13(spark, sf_dir):
 
 def test_onestage_cent_rows_identical(spark, sf_dir):
     """Round-13 single-stage centroid collects: the quant paths
-    collect their ≤nlist-row centroid tables through dedicated
-    scan→project plans (no spread exchanges — a 3-stage AQE job per
-    timed build otherwise). The expressions are the same ops in the
-    same order as the composed pipelines, so the rows must be
-    BIT-equal, not just close."""
+    collect their ≤nlist-row centroid tables through one scan→project
+    builder, ``_onestage_cents``, which runs the composed pipelines'
+    own projection steps without their spread exchanges (a 3-stage
+    AQE job per timed build otherwise). Same ops in the same order,
+    so the rows of both corpora must be BIT-equal, not just close."""
     from pyspark.sql import functions as F
 
     from validation_database_spark.suite import similarity as S
@@ -1134,7 +1135,7 @@ def test_onestage_cent_rows_identical(spark, sf_dir):
     # RAG: one-stage vs the composed _rag_frames cents path
     _, _, cents = S._rag_frames(spark, sf_dir)
     composed = cents.selectExpr("cent_id", f"{S._to_e6_expr('c_v')} AS cx")
-    one = S._rag_cent_rows_onestage(spark, sf_dir)
+    one = S._onestage_cents(spark, sf_dir, "documents")
     assert sorted(map(tuple, one.collect())) == sorted(
         map(tuple, composed.collect())
     )
@@ -1146,10 +1147,8 @@ def test_onestage_cent_rows_identical(spark, sf_dir):
     composed_ann = emb.filter(
         (F.col("vec_id") % S.CENTROID_MOD == S.CENTROID_OFF)
         & (F.col("vec_id") < S.CENTROID_MOD * S.CENTROID_CAP)
-        & F.col("x").isNotNull()
-        & ~F.exists("x", lambda e: e.isNull())
     ).select(F.col("vec_id").alias("cent_id"), F.col("x").alias("cx"))
-    one_ann = S._ann_cent_frame_onestage(spark, sf_dir)
+    one_ann = S._onestage_cents(spark, sf_dir, "embeddings")
     assert sorted(map(tuple, one_ann.collect())) == sorted(
         map(tuple, composed_ann.collect())
     )

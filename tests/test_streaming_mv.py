@@ -14,6 +14,7 @@ from __future__ import annotations
 import os
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from validation_database_spark.sources import load_table
@@ -86,3 +87,14 @@ def test_streaming_mv_equals_batch_incremental_and_replays_idempotently(
     q2.awaitTermination(120)
     assert sorted(os.listdir(out)) == sorted(versions)
     assert _sorted_rows(latest_mv_snapshot(spark, out)) == _sorted_rows(expected)
+
+
+def test_latest_mv_snapshot_without_a_commit_names_dir_and_marker(spark, tmp_path):
+    """A directory whose only version was never sealed (the job died
+    mid-batch) has no committed snapshot: the reader must say so by
+    name, not fail on an empty version list."""
+    out = tmp_path / "out"
+    (out / "v0").mkdir(parents=True)
+    with pytest.raises(ValueError, match="_MV_COMMITTED") as err:
+        latest_mv_snapshot(spark, str(out))
+    assert str(out) in str(err.value)

@@ -190,6 +190,24 @@ def athena_odps_source(config: dict[str, Any], db: str) -> JdbcSource:
     )
 
 
+def _require_columns(df: DataFrame, columns: list[str], source: str) -> None:
+    """Raise a ``ValueError`` naming ``source``, the column and the
+    available columns when a configured column is absent from ``df``,
+    instead of the raw ``AnalysisException`` a select would raise.
+    Reads the schema only (zero Spark jobs); a dotted name is checked
+    by its top-level field, and names match the way the session
+    resolves them (case-insensitively unless spark.sql.caseSensitive)."""
+    have = df.columns
+    exact = df.sparkSession.conf.get("spark.sql.caseSensitive", "false") == "true"
+    fold = (lambda c: c) if exact else str.lower
+    known = {fold(c) for c in have}
+    for col in columns:
+        if fold(str(col).split(".")[0]) not in known:
+            raise ValueError(
+                f"{source}: column {col!r} not found; available columns: {have}"
+            )
+
+
 def _project(
     df: DataFrame, config: dict[str, Any], db: str
 ) -> DataFrame:
@@ -197,12 +215,14 @@ def _project(
     + check column, with the optional strictly-exclusive date range."""
     key_cols = _key_columns(config)
     check = config["check_column"]
+    date_col = config.get(f"{db}_database_date_column")
+    start, end = config.get("start_date"), config.get("end_date")
+    dated = bool(date_col and start and end)
+    _require_columns(df, [*key_cols, check, *([date_col] if dated else [])], db)
     out = df.select(
         composite_id(key_cols).alias("id"), F.col(check).alias(check)
     )
-    date_col = config.get(f"{db}_database_date_column")
-    start, end = config.get("start_date"), config.get("end_date")
-    if date_col and start and end:
+    if dated:
         lo = F.lit(f"{start} 00:00:00").cast("timestamp")
         hi = F.lit(f"{end} 00:00:00").cast("timestamp")
         out = df.filter((F.col(date_col) > lo) & (F.col(date_col) < hi)).select(
@@ -262,6 +282,8 @@ def run_validation(spark: SparkSession, config: dict[str, Any]) -> ValidationRun
         first = spark.sql(queries["first_query"])
         second = spark.sql(queries["second_query"])
         check = config["check_column"]
+        _require_columns(first, ["id", check], f"{db1} (queries.first_query)")
+        _require_columns(second, ["id", check], f"{db2} (queries.second_query)")
     else:
         for db in (db1, db2):
             src = redact(dict(config.get(f"{db}_source", {}) or {}))

@@ -29,12 +29,12 @@ The fix is value-neutral and comes in one shape with two knobs:
   Cogroups don't need it — ``applyInPandas`` already shuffles on
   the full grouping key.
 
-Adopted call sites (each pinned value-neutral by
-tests/test_ann_recall.py / tests/test_fanout.py):
-``q_ann_ivf_cosine`` (float join + repartition),
-``q_ann_ivf_quant`` / ``_rag_quant_scored`` (cogroup),
-``q_rag_retrieval_ivf``'s dropped-broadcast-hint regime (join +
-repartition — VERDICT r11 ask #5).
+Adopted call sites, both in ``operators/ivf.py`` (each pinned
+value-neutral by tests/test_ann_recall.py / tests/test_fanout.py):
+``score_float`` (join + repartition: every ``q_ann_ivf_cosine`` build,
+and ``q_rag_retrieval_ivf`` past its probe-broadcast bound) and
+``score_e6`` (cogroup: ``q_ann_ivf_quant``,
+``q_rag_retrieval_ivf_quant``).
 """
 
 from __future__ import annotations
@@ -68,8 +68,8 @@ def salted_fanout(
     the second): JOIN-shaped fan-outs, where the fused join+sort must
     run ``parts`` wide (module docstring), and COGROUPS, where the
     per-GROUP Python latency is invisible to AQE's byte-based sizing
-    — pass ``parts=cogroup_parts(spark)`` there (round 12's
-    q_ann_ivf_quant / _rag_quant_scored fix). Leave them unset only
+    — pass ``parts=cogroup_parts(spark)`` there (round 12's fix,
+    now in operators.ivf.score_e6). Leave them unset only
     when the downstream layout genuinely doesn't matter."""
     big_s = big.withColumn(
         SALT_COL, (F.crc32(salt_key) % n_salt).cast("int")

@@ -28,6 +28,8 @@ scales horizontally with shuffle partitions.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -49,8 +51,6 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming output follows the session timezone (the engine pins
     UTC in session.py).
     """
-    import os
-
     # The file source requires a directory. The fixture ships events
     # as a single FILE (sf_dir/events.parquet) — select it via the
     # glob filter; the scale replicas ship it as a multi-file
@@ -353,6 +353,70 @@ def streaming_incremental_dedup(
     )
 
 
+def _committed_versions(out_dir: str, marker: str) -> list[int]:
+    """Sorted batch ids of the ``v<batchId>`` directories under
+    ``out_dir`` that ``marker`` seals."""
+    if not os.path.isdir(out_dir):
+        return []
+    return sorted(
+        int(d[1:])
+        for d in os.listdir(out_dir)
+        if d.startswith("v") and os.path.exists(os.path.join(out_dir, d, marker))
+    )
+
+
+def _versioned_commit(
+    spark: SparkSession,
+    stream: DataFrame,
+    initial_path: str,
+    out_dir: str,
+    marker: str,
+    checkpoint: str,
+    step,
+):
+    """Start ``stream`` as a ``foreachBatch`` query that keeps a
+    versioned parquet state: batch ``b`` reads the latest version
+    committed before it (``initial_path`` when there is none), writes
+    ``step(state, batch_df)`` to ``out_dir/v<b>`` and seals the
+    directory with ``marker``.
+
+    Exactly-once without sink transactions: ``foreachBatch`` may
+    REPLAY a batch after checkpoint recovery, so a replayed batchId
+    finds its marker and returns without touching anything (the
+    idempotent-write recipe from the public Structured Streaming
+    docs). On a real deployment the table format's ACID commit
+    (sources/lakehouse.py) replaces the versioned directories; the
+    ``step`` plan is unchanged."""
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        dest = os.path.join(out_dir, f"v{batch_id}")
+        if os.path.exists(os.path.join(dest, marker)):
+            return  # replayed after recovery — already applied
+        prior = [v for v in _committed_versions(out_dir, marker) if v < batch_id]
+        src = os.path.join(out_dir, f"v{max(prior)}") if prior else initial_path
+        step(spark.read.parquet(src), batch_df).write.mode("overwrite").parquet(dest)
+        with open(os.path.join(dest, marker), "w"):
+            pass
+
+    return (
+        stream.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _latest_committed(spark: SparkSession, out_dir: str, marker: str) -> DataFrame:
+    """The highest version under ``out_dir`` that ``marker`` seals."""
+    versions = _committed_versions(out_dir, marker)
+    if not versions:
+        raise ValueError(
+            f"no committed version under {out_dir!r}: no v<batchId> "
+            f"directory there holds a {marker} marker"
+        )
+    return spark.read.parquet(os.path.join(out_dir, f"v{versions[-1]}"))
+
+
 def streaming_cdc_apply(
     spark: SparkSession,
     changes: DataFrame,
@@ -367,69 +431,29 @@ def streaming_cdc_apply(
     merged against the latest committed snapshot version with the
     same LWW/delete semantics, and the new snapshot lands in a
     batchId-versioned directory sealed by a ``_CDC_COMMITTED``
-    marker.
-
-    Exactly-once without sink transactions: ``foreachBatch`` may
-    REPLAY a batch after checkpoint recovery, so the apply is
-    idempotent — a replayed batchId finds its marker and returns
-    without touching anything (the idempotent-write recipe from the
-    public Structured Streaming docs). Sequential batch application
-    equals one global LWW pass when sequence numbers are monotone
-    across batches, which is pinned against the oracle-checked batch
-    operator in ``tests/test_streaming_cdc.py``.
-
-    On a real deployment the versioned-directory dance is replaced by
-    the table format's ACID commit (sources/lakehouse.py) — the merge
-    plan itself is unchanged."""
-    import os
-
+    marker (:func:`_versioned_commit`, so replays are no-ops).
+    Sequential batch application equals one global LWW pass when
+    sequence numbers are monotone across batches, which is pinned
+    against the oracle-checked batch operator in
+    ``tests/test_streaming_cdc.py``."""
     from ..suite.pipeline import apply_cdc
 
-    def _committed_versions() -> list[int]:
-        if not os.path.isdir(out_dir):
-            return []
-        return sorted(
-            int(d[1:])
-            for d in os.listdir(out_dir)
-            if d.startswith("v")
-            and os.path.exists(os.path.join(out_dir, d, "_CDC_COMMITTED"))
-        )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        dest = os.path.join(out_dir, f"v{batch_id}")
-        if os.path.exists(os.path.join(dest, "_CDC_COMMITTED")):
-            return  # replayed after recovery — already applied
-        prior = [v for v in _committed_versions() if v < batch_id]
-        src = (
-            os.path.join(out_dir, f"v{max(prior)}")
-            if prior
-            else initial_snapshot_path
-        )
-        snap = spark.read.parquet(src)
-        apply_cdc(snap, batch_df, key).write.mode("overwrite").parquet(dest)
-        with open(os.path.join(dest, "_CDC_COMMITTED"), "w"):
-            pass
-
-    return (
-        changes.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _versioned_commit(
+        spark,
+        changes,
+        initial_snapshot_path,
+        out_dir,
+        "_CDC_COMMITTED",
+        checkpoint,
+        lambda snap, batch_df: apply_cdc(snap, batch_df, key),
     )
 
 
 def latest_cdc_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read the highest committed snapshot version written by
-    :func:`streaming_cdc_apply`."""
-    import os
-
-    versions = sorted(
-        int(d[1:])
-        for d in os.listdir(out_dir)
-        if d.startswith("v")
-        and os.path.exists(os.path.join(out_dir, d, "_CDC_COMMITTED"))
-    )
-    return spark.read.parquet(os.path.join(out_dir, f"v{versions[-1]}"))
+    :func:`streaming_cdc_apply`; ``ValueError`` when none is
+    committed."""
+    return _latest_committed(spark, out_dir, "_CDC_COMMITTED")
 
 
 def streaming_mv_maintain(
@@ -461,34 +485,13 @@ def streaming_mv_maintain(
     Delta rows carry (key, dn, dc): dn=+1/dc=+cents for an insert,
     dn=-1/dc=-cents for a delete of a row whose before-image the CDC
     stream provides (the Debezium shape)."""
-    import os
 
-    def _committed() -> list[int]:
-        if not os.path.isdir(out_dir):
-            return []
-        return sorted(
-            int(d[1:])
-            for d in os.listdir(out_dir)
-            if d.startswith("v")
-            and os.path.exists(os.path.join(out_dir, d, "_MV_COMMITTED"))
-        )
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        dest = os.path.join(out_dir, f"v{batch_id}")
-        if os.path.exists(os.path.join(dest, "_MV_COMMITTED")):
-            return  # replayed after recovery — already applied
-        prior = [v for v in _committed() if v < batch_id]
-        src = (
-            os.path.join(out_dir, f"v{max(prior)}")
-            if prior
-            else initial_view_path
-        )
-        view = spark.read.parquet(src)
+    def _merge(view: DataFrame, batch_df: DataFrame) -> DataFrame:
         partial = batch_df.groupBy(key).agg(
             F.sum("dn").cast("bigint").alias("dn"),
             F.sum("dc").cast("bigint").alias("dc"),
         )
-        merged = (
+        return (
             view.join(partial, key, "full_outer")
             .select(
                 F.col(key),
@@ -501,30 +504,17 @@ def streaming_mv_maintain(
             )
             .filter(F.col("n_orders") > 0)
         )
-        merged.write.mode("overwrite").parquet(dest)
-        with open(os.path.join(dest, "_MV_COMMITTED"), "w"):
-            pass
 
-    return (
-        deltas.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _versioned_commit(
+        spark, deltas, initial_view_path, out_dir, "_MV_COMMITTED", checkpoint, _merge
     )
 
 
 def latest_mv_snapshot(spark: SparkSession, out_dir: str) -> DataFrame:
     """Read the highest committed view version written by
-    :func:`streaming_mv_maintain`."""
-    import os
-
-    versions = sorted(
-        int(d[1:])
-        for d in os.listdir(out_dir)
-        if d.startswith("v")
-        and os.path.exists(os.path.join(out_dir, d, "_MV_COMMITTED"))
-    )
-    return spark.read.parquet(os.path.join(out_dir, f"v{versions[-1]}"))
+    :func:`streaming_mv_maintain`; ``ValueError`` when none is
+    committed."""
+    return _latest_committed(spark, out_dir, "_MV_COMMITTED")
 
 
 def streaming_session_totals(

@@ -9,18 +9,23 @@ rounded to 6 decimals *before* ranking/thresholding, with vec_id as
 the final tiebreak — identical row selection on both engines.
 
 Scale posture: the centroid set is tiny and broadcast; the per-vector
-assignment is a broadcast nested-loop over |centroids| (a narrow map
+assignment is a row-local selection over |centroids| (a narrow map
 at any scale), and query probing touches only nprobe cells — the
 brute-force O(n·q) path exists solely as the verification baseline.
+The five IVF builders (float and e6 ANN, float and e6 RAG, IVF-PQ)
+compose the build / probe / score steps of ``operators/ivf.py``.
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import ivf
+from ..operators.fanout import cogroup_parts, fanout_layout, parquet_rows
+from ..operators.ivf import stack_int64
 from ..operators.vectors import (
     dot,
     dot_expr,
@@ -30,7 +35,7 @@ from ..operators.vectors import (
     unit_sql,
 )
 from ..sources import load_table
-from ..util import pin, spread
+from ..util import SPREAD, pin, select_steps, spread
 from . import QuerySpec
 
 def _geo(name: str, default: int) -> int:
@@ -78,6 +83,13 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spread(load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding"))
 
 
+_UNIT_EMB_STEPS = (
+    ("vec_id", "embedding", f"{l2_norm_expr('embedding')} AS __nrm"),
+    SPREAD,
+    ("vec_id", "transform(embedding, x -> cast(x as double) / __nrm) AS u"),
+)
+
+
 def _unit_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, u): unit-normalized vectors. cosine(a, b) ==
     dot(unit(a), unit(b)), so normalizing once per ROW makes every
@@ -89,16 +101,23 @@ def _unit_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     the O(d) norm fold runs once per row instead of being inlined
     into the element-wise division lambda (d times per row).
 
-    Built from Spark-SQL strings (round 12): the Column-API lambda
-    chain costs one py4j round trip per node on EVERY timed build;
-    the strings are the literal rendering of the same tree
-    (sameSemantics-pinned in tests/test_plans.py)."""
-    emb = load_table(spark, "embeddings", sf_dir).selectExpr(
-        "vec_id", "embedding", f"{l2_norm_expr('embedding')} AS __nrm"
+    Built from Spark-SQL strings: the Column-API lambda chain costs
+    one py4j round trip per node on EVERY build; the strings are the
+    literal rendering of the same tree (sameSemantics-pinned in
+    tests/test_plans.py)."""
+    return select_steps(load_table(spark, "embeddings", sf_dir), _UNIT_EMB_STEPS)
+
+
+def _ann_cent_pred() -> str:
+    return (
+        f"vec_id % {CENTROID_MOD} = {CENTROID_OFF}"
+        f" AND vec_id < {CENTROID_MOD * CENTROID_CAP}"
     )
-    return spread(emb).selectExpr(
-        "vec_id",
-        "transform(embedding, x -> cast(x as double) / __nrm) AS u",
+
+
+def _ann_queries(emb: DataFrame, vec: str = "u", out: str = "q_u") -> DataFrame:
+    return emb.filter(f"vec_id % {QUERY_MOD} = 0").selectExpr(
+        "vec_id AS query_id", f"{vec} AS {out}"
     )
 
 
@@ -115,11 +134,8 @@ def q_ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel across queries). Vectors are unit-normalized once, so
     each of the n·q scored pairs is a single sequential dot."""
     emb = _unit_emb(spark, sf_dir)
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("u").alias("q_u")
-    )
     scored = (
-        emb.crossJoin(F.broadcast(queries))
+        emb.crossJoin(F.broadcast(_ann_queries(emb)))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -127,13 +143,7 @@ def q_ann_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot(F.col("q_u"), F.col("u")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
-    )
+    return ivf.top_k(scored, "query_id", "cos_sim", ["vec_id"], TOP_K)
 
 
 _COS_QV = dot_sql("q.u", "v.u")
@@ -153,26 +163,8 @@ SELECT query_id, vec_id, cos_sim, rk FROM (
 
 # --- IVF (cell-probed) -------------------------------------------------
 
-
-def _geo_opt(name: str) -> int | None:
-    """Like :func:`_geo` but with NO fixed default: None means
-    "derive at plan time from corpus stats" (VERDICT r11 ask #2 —
-    the 2M-vector point was hand-sized from docstring prose; the
-    env override is retained for deployments that know better)."""
-    import os
-
-    v = os.environ.get(f"SPARK_GRAFT_{name}")
-    return int(v) if v is not None else None
-
-
-# Fan-out layout knobs for the float IVF arm (VERDICT r10 ask #1 —
-# see q_ann_ivf_cosine's docstring). Since round 12 the default is
-# PLAN-TIME DERIVED from corpus stats (ann_float_layout below);
-# setting SPARK_GRAFT_ANN_FLOAT_SALT / _PARTS pins either knob.
-ANN_FLOAT_SALT = _geo_opt("ANN_FLOAT_SALT")
-ANN_FLOAT_PARTS = _geo_opt("ANN_FLOAT_PARTS")
-# Target fan-out pairs per task for the derived layout (~5 s of the
-# measured 0.58 µs/pair float scoring per slab).
+# Target fan-out pairs per task for the derived float layout (~5 s of
+# the measured 0.58 µs/pair float scoring per slab).
 ANN_FLOAT_SLAB = _geo("ANN_FLOAT_SLAB", 8_000_000)
 # Probes visit POPULOUS cells preferentially (a cell's probe mass
 # correlates with its member mass), so the uniform estimate
@@ -184,18 +176,15 @@ ANN_FANOUT_SKEW = 2.5
 
 
 def ann_float_layout(n_vectors: int | None) -> tuple[int, int]:
-    """Derive the float arm's (salt, parts) from the corpus size —
-    the docstring sizing prose of round 11 as code (VERDICT r11 ask
-    #2). Estimated fan-out = (n/QUERY_MOD)·nprobe·(n/nlist)·skew,
-    then operators.fanout.fanout_layout targets ANN_FLOAT_SLAB pairs
-    per task with the r10 fixture floors (4, 32) — small corpora keep
-    the proven fixture layout exactly; the 2M-vector replica derives
+    """Derive the float arm's (salt, parts) from the corpus size.
+    Estimated fan-out = (n/QUERY_MOD)·nprobe·(n/nlist)·skew, then
+    operators.fanout.fanout_layout targets ANN_FLOAT_SLAB pairs per
+    task with the fixture floors (4, 32) — small corpora keep the
+    proven fixture layout exactly; the 2M-vector replica derives
     (8, 391), the decade the hand-sized salt 8 / parts 256 run
     measured at 1,993 s cold (SCALE.md round 11). Pinned at both
     anchors by tests/test_fanout.py. None (footer stats unreadable)
     falls back to the floors."""
-    from ..operators.fanout import fanout_layout
-
     if n_vectors is None:
         return fanout_layout(1, CENTROID_CAP, ANN_FLOAT_SLAB)
     nlist = min(CENTROID_CAP, max(n_vectors // CENTROID_MOD, 1))
@@ -208,155 +197,38 @@ def ann_float_layout(n_vectors: int | None) -> tuple[int, int]:
     return fanout_layout(est, nlist, ANN_FLOAT_SLAB)
 
 
+def _ann_float_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(centroid array row, vectors with their nearest ``cent_id``):
+    the float build shared by ``q_ann_ivf_cosine`` and ``q_ann_ivfpq``."""
+    cents = emb.filter(_ann_cent_pred()).selectExpr("vec_id AS cent_id", "u")
+    carr = ivf.centroid_array(cents, "u")
+    return carr, ivf.assign_cells(emb, carr, "u", 1)
+
+
 def q_ann_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search: every vector is assigned to its nearest centroid
     cell; each query probes its nprobe=2 nearest cells and ranks only
     the vectors inside them. Results can differ from exact top-k —
     that is the approximation; the oracle runs the identical IVF.
 
-    Scale shape (round 11, VERDICT r10 ask #1): the scored fan-out is
-    |probing queries| x |cell| pairs, and its final per-query rank
-    window already gets a map-side partial WindowGroupLimit (top-K
-    per query leaves each task, so the exchange is small) — but the
-    partial's own SORT runs in whatever layout the join inherits,
-    and the join's INPUTS are small, so AQE coalesced them to 22
-    partitions at the 2M-vector replica and the 3.21B-pair fan-out
-    sorted as 22 single-threaded ~146M-row spilling slabs (the
-    round-10 DNF: terminated at 7,063 s with the last straggler
-    >=26 min). Fix: vectors carry a crc32 salt, probes replicate to
-    every salt (each candidate pair still matches exactly once — the
-    quant twin's cogroup rule), and the assigned side is
-    repartitioned by (cent_id, __salt) with an EXPLICIT partition
-    count, which AQE never coalesces (REPARTITION_BY_NUM). The
-    fan-out + sort now run ANN_FLOAT_PARTS wide with slabs bounded
-    at ~pairs/(nlist x salt) even under cell skew. Value-neutral:
-    same pairs, same scores, same tie-breaks (pinned by
-    tests/test_ann_recall.py::test_ann_float_salt_is_value_neutral);
-    SCALE.md round 11 has the re-measured 2M point. Layout sizing
-    (round 12, VERDICT r11 ask #2): derived at plan time from the
-    corpus row count by ann_float_layout — fixture corpora keep the
-    proven (4, 32) floors, the 2M replica derives (8, 391) — with
-    SPARK_GRAFT_ANN_FLOAT_SALT / _PARTS retained as pin-overrides
-    and SPARK_GRAFT_ANN_FLOAT_SLAB setting the per-task pair
-    target."""
+    Build, probe and score are the float steps of operators.ivf. The
+    scored fan-out is |probing queries| x |cell| pairs, and it runs in
+    the salted, explicitly partitioned layout: its inputs are small,
+    so AQE would coalesce the stage to a few partitions (22 at the
+    2M-vector replica, where the 3.21B-pair fan-out sorted as
+    single-threaded ~146M-row spilling slabs and never finished).
+    The layout is derived at plan time from the corpus row count by
+    ann_float_layout — fixture corpora keep the (4, 32) floors, the
+    2M replica derives (8, 391) — and is value-neutral: same pairs,
+    same scores, same tie-breaks (pinned by
+    tests/test_ann_recall.py::test_ann_float_salt_is_value_neutral).
+    SCALE.md round 11 has the measured 2M point."""
     emb = _unit_emb(spark, sf_dir)
-    cents = emb.filter(
-        (F.col("vec_id") % CENTROID_MOD == CENTROID_OFF)
-        & (F.col("vec_id") < CENTROID_MOD * CENTROID_CAP)
-    ).select(F.col("vec_id").alias("cent_id"), F.col("u").alias("c_u"))
-
-    # vector → nearest centroid, ROW-LOCALLY (round 12). History of
-    # this stage: a row_number window shuffled all |vectors|·|cents|
-    # scored rows (Java-heap OOM at the 100× replica); the r4 fix was
-    # a max(struct) aggregation with map-side combine — but that
-    # still materialized the |vectors|·|cents| crossJoin rows (each
-    # carrying the 64-double unit vector) and burned the suite's
-    # hottest CPU in ObjectHash/Sort aggregation buffers (round-12
-    # stage profile: ~10 s CPU per run on the RAG float twin's copy).
-    # Now the ≤nlist centroid table is folded to ONE array row
-    # (sort_array(collect_list(struct)) — deterministic order) and
-    # broadcast; each vector computes its argmax inside a single
-    # projection: max over transform(cents, c -> struct(a_cos,
-    # -cent_id)) — the IDENTICAL comparator the max(struct) agg used
-    # (array_max and max share the struct ordering; cent_id is
-    # unique, so ties never pass the second field). No crossJoin
-    # row materialization, no aggregation, no exchange: a narrow map
-    # at any scale, strictly stronger than the r4 shape (pinned in
-    # tests/test_plans.py::test_ivf_assignment_is_rowlocal_narrow_map).
-    # Empty-cents edge (ADVICE r12): cents.agg(collect_list) always
-    # emits ONE row (empty array), so with zero centroids every vector
-    # gets cent_id NULL here — the old crossJoin+groupBy shape emitted
-    # an empty frame instead. Final results are identical (downstream
-    # inner joins on cent_id drop NULLs); only the INTERMEDIATE
-    # frame's contract differs — guard with a non-empty check if this
-    # frame is ever consumed directly.
-    carr = F.broadcast(
-        cents.agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("cent_id"), F.col("c_u")))
-            ).alias("cs")
-        )
-    )
-    best = F.array_max(
-        F.transform(
-            F.col("cs"),
-            lambda c: F.struct(
-                F.round(dot(F.col("u"), c["c_u"]), 6).alias("a_cos"),
-                (-c["cent_id"]).alias("neg_cent"),
-            ),
-        )
-    )
-    assigned = emb.crossJoin(carr).select(
-        "vec_id", "u", (-best["neg_cent"]).alias("cent_id")
-    )
-
-    # query → nprobe nearest centroids, same row-local form: struct
-    # sort DESC orders (p_cos DESC, neg_cent DESC ≡ cent_id ASC) —
-    # exactly the old window's ORDER BY — and slice keeps the top
-    # nprobe, so the probed set is identical.
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("u").alias("q_u")
-    )
-    probed_arr = F.slice(
-        F.sort_array(
-            F.transform(
-                F.col("cs"),
-                lambda c: F.struct(
-                    F.round(dot(F.col("q_u"), c["c_u"]), 6).alias("p_cos"),
-                    (-c["cent_id"]).alias("neg_cent"),
-                ),
-            ),
-            asc=False,
-        ),
-        1,
-        N_PROBE,
-    )
-    probes = (
-        queries.crossJoin(carr)
-        .select(
-            "query_id",
-            "q_u",
-            F.explode(
-                F.transform(probed_arr, lambda s: -s["neg_cent"])
-            ).alias("cent_id"),
-        )
-    )
-
-    # search only the probed cells. Salt + explicit-count repartition
-    # bound the fan-out stage's sort slabs and parallelism (docstring
-    # above); every pair matches on exactly one salt value. The
-    # layout is plan-time derived from the corpus row count unless
-    # the env knobs pin it (ann_float_layout above).
-    from ..operators.fanout import parquet_rows, salted_fanout
-
-    salt_n, parts_n = ANN_FLOAT_SALT, ANN_FLOAT_PARTS
-    if salt_n is None or parts_n is None:
-        d_salt, d_parts = ann_float_layout(parquet_rows(sf_dir, "embeddings"))
-        salt_n = d_salt if salt_n is None else salt_n
-        parts_n = d_parts if parts_n is None else parts_n
-    a_s, p_s = salted_fanout(
-        assigned,
-        probes,
-        F.col("vec_id").cast("string"),
-        salt_n,
-        parts=parts_n,
-        partition_keys=("cent_id",),
-    )
-    scored = (
-        p_s.join(a_s, ["cent_id", "__salt"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(dot(F.col("q_u"), F.col("u")), 6).alias("cos_sim"),
-        )
-    )
-    s_w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(s_w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
+    carr, assigned = _ann_float_index(emb)
+    probes = ivf.probe_cells(_ann_queries(emb), carr, "q_u", N_PROBE)
+    layout = ann_float_layout(parquet_rows(sf_dir, "embeddings"))
+    return ivf.score_float(
+        assigned, probes, ["vec_id"], "query_id", "u", "q_u", TOP_K, layout
     )
 
 
@@ -416,10 +288,10 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute = q_ann_topk_cosine(spark, sf_dir).select(
         F.lit("brute").alias("method"), "query_id", "vec_id", "cos_sim", "rk"
     )
-    ivf = q_ann_ivf_cosine(spark, sf_dir).select(
+    cells = q_ann_ivf_cosine(spark, sf_dir).select(
         F.lit("ivf").alias("method"), "query_id", "vec_id", "cos_sim", "rk"
     )
-    return brute.unionByName(ivf)
+    return brute.unionByName(cells)
 
 
 ORACLE_ANN_TOPK_TAGGED = f"""
@@ -812,11 +684,7 @@ def q_ann_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot(F.col("q_u"), F.col("u")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
-    )
+    return ivf.top_k(scored, "query_id", "cos_sim", ["vec_id"], TOP_K)
 
 
 def _oracle_ann_lsh() -> str:
@@ -1161,26 +1029,6 @@ def q_semantic_dedup_hier(spark: SparkSession, sf_dir: str) -> DataFrame:
 _NEAREST_KERNEL_MEMO: dict = {}
 
 
-def _stack_int64(vecs: list) -> tuple[np.ndarray, np.ndarray]:
-    """(idx, M): positions of the fully-non-null vectors in ``vecs``
-    and their stacked int64 matrix — the vectorized null-routing
-    guard shared by the Arrow vector kernels (ADVICE r8). A null
-    vector arrives as a None row; a null ELEMENT (a zero-norm
-    embedding normalizes to null) promotes the whole Arrow chunk to
-    float64 with NaN, so the isnan scan only runs on float chunks and
-    a clean batch stacks zero-copy to int64 (e6 coords ≤1.4e6
-    roundtrip float64 exactly)."""
-    notnull = np.array([v is not None for v in vecs], dtype=bool)
-    sub = [v for v in vecs if v is not None]
-    M = np.asarray(sub) if sub else np.empty((0, 1), dtype=np.int64)
-    good = (
-        ~np.isnan(M).any(axis=1)
-        if M.dtype.kind == "f"
-        else np.ones(len(sub), dtype=bool)
-    )
-    return np.flatnonzero(notnull)[good], M[good].astype(np.int64, copy=False)
-
-
 def _nearest_seed_arrow(
     seeds: DataFrame, id_col: str, vec_col: str, _chunk: int | None = None
 ):
@@ -1257,7 +1105,7 @@ def _nearest_seed_arrow(
         # Null-routing (ADVICE r8): the pre-Arrow SQL argmin
         # propagated NULL to the join, which dropped the row —
         # reproduce that via the shared vectorized guard.
-        idx, M = _stack_int64(vecs)
+        idx, M = stack_int64(vecs)
         if len(idx) == len(vecs):
             return pd.Series(_argmin_ids(M))
         out = pd.array([None] * len(vecs), dtype="Int64")
@@ -1442,16 +1290,13 @@ RAG_ASSIGN = _geo("RAG_ASSIGN", 2)
 # probes replicate into all buckets). Value-neutral — any setting
 # scores every pair exactly once — so the oracle ignores it.
 RAG_COGROUP_SALT = _geo("RAG_COGROUP_SALT", 8)
-# Probe-broadcast bound for the float fold (VERDICT r11 ask #5):
-# above this many estimated probe rows (|queries|·nprobe, each
-# carrying a d=64-double qvec — ~200k rows ≈ 100 MB of broadcast
-# payload, the sensible driver/executor-memory ceiling well past the
-# 10 MB auto threshold a HINT ignores), the broadcast hint is
-# DROPPED and the scored join runs in the salted REPARTITION_BY_NUM
-# layout instead — previously a prose recipe in this module, now the
-# code path q_rag_retrieval_ivf switches to (the round-10 DNF trap
-# this disarms: AQE sizes the fan-out stage by its small join
-# inputs). Env: SPARK_GRAFT_RAG_BCAST_ROWS.
+# Probe-broadcast bound for the float fold: above this many estimated
+# probe rows (|queries|·nprobe, each carrying a d=64-double qvec —
+# ~200k rows ≈ 100 MB of broadcast payload, the sensible
+# driver/executor-memory ceiling well past the 10 MB auto threshold a
+# HINT ignores), the broadcast hint is DROPPED and the scored join
+# runs in the salted REPARTITION_BY_NUM layout instead.
+# Env: SPARK_GRAFT_RAG_BCAST_ROWS.
 RAG_BCAST_PROBE_ROWS = _geo("RAG_BCAST_ROWS", 200_000)
 # Chunk-count estimate for the dropped-hint layout sizing: sliding
 # 64-token windows at stride 32 over the fixture corpus measure
@@ -1460,10 +1305,36 @@ RAG_BCAST_PROBE_ROWS = _geo("RAG_BCAST_ROWS", 200_000)
 RAG_CHUNKS_PER_DOC_EST = 4
 
 
+_RAG_DOC_STEPS = (
+    SPREAD,
+    ("doc_id", "filter(split(lower(text), ' '), x -> x != '') AS toks"),
+)
+
+
+def _docvec_steps(id_alias: str, out: str) -> tuple:
+    """Whole-document hashed-BoW unit vectors (``id_alias``, ``out``)
+    from the tokenized ``_RAG_DOC_STEPS`` rows."""
+    from .text import hash_bucket_counts_expr
+
+    return (
+        (f"doc_id AS {id_alias}", f"{hash_bucket_counts_expr('toks')} AS v"),
+        ("*", f"greatest({l2_norm_expr('v')}, 1E-12D) AS __n"),
+        SPREAD,
+        (id_alias, f"transform(v, x -> x / __n) AS {out}"),
+    )
+
+
+def _rag_cent_pred() -> str:
+    return (
+        f"doc_id % {RAG_CENT_MOD} = {RAG_CENT_OFF}"
+        f" AND doc_id < {RAG_CENT_MOD * RAG_CENT_CAP}"
+    )
+
+
 def _rag_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(chunks, queries, cents) — the shared corpus for both RAG
+    """(chunks, queries, cents) — the shared corpus for the RAG
     paths: sliding 64-token chunks with hashed-BoW vectors, every
     50th document embedded whole as a query, every 20th (capped) as
     an IVF centroid cell.
@@ -1473,66 +1344,65 @@ def _rag_frames(
     unit(b)), so normalizing once at index-build time makes every
     scored PAIR one sequential dot instead of three folds
     (dot + both norms) — at sf10's 375M scored pairs that is the
-    dominant serving cost. The chunk table's norms are materialized
-    behind a repartition barrier so the O(d) norm fold runs once per
-    chunk, not once per element of the division lambda; the
-    query/centroid frames are tiny and normalize inline. Norms are
-    floored at 1e-12 on BOTH engines: an all-OOV (empty-vector) chunk
-    otherwise yields NaN cosines, which both engines sort above every
-    real score in the descending top-k.
+    dominant serving cost. The norms are materialized behind a
+    repartition barrier so the O(d) norm fold runs once per row, not
+    once per element of the division lambda. Norms are floored at
+    1e-12 on BOTH engines: an all-OOV (empty-vector) chunk otherwise
+    yields NaN cosines, which both engines sort above every real
+    score in the descending top-k.
 
-    Built from Spark-SQL strings (round 12): the Column-API lambda
-    chains (tokenize, hash histogram ×3 frames, norm folds, unit
-    division) cost ~0.6 s of py4j round trips per timed BUILD; the
-    strings are the literal rendering of the same trees
-    (sameSemantics-pinned in tests/test_plans.py)."""
+    Built from Spark-SQL strings: the Column-API lambda chains cost
+    ~0.6 s of py4j round trips per BUILD; the strings are the literal
+    rendering of the same trees (sameSemantics-pinned in
+    tests/test_plans.py)."""
     from .text import CHUNK_SIZE, _STRIDE, hash_bucket_counts_expr
 
-    toks_expr = "filter(split(lower(text), ' '), x -> x != '')"
-    docs = spread(load_table(spark, "documents", sf_dir)).selectExpr(
-        "doc_id", f"{toks_expr} AS toks"
-    )
+    docs = select_steps(load_table(spark, "documents", sf_dir), _RAG_DOC_STEPS)
     starts = f"sequence(1, greatest(size(toks), 1), {_STRIDE})"
-    chunks_raw = (
-        docs.selectExpr(
-            "doc_id", f"posexplode({starts}) AS (chunk_idx, st)", "toks"
-        )
-        .selectExpr(
-            "doc_id",
-            "cast(chunk_idx as bigint) AS chunk_idx",
-            f"slice(toks, st, {CHUNK_SIZE}) AS ctoks",
-        )
-        .selectExpr(
-            "doc_id", "chunk_idx", f"{hash_bucket_counts_expr('ctoks')} AS cv"
-        )
-        .selectExpr(
-            "*", f"greatest({l2_norm_expr('cv')}, 1E-12D) AS __n"
-        )
-    )
-    chunks = spread(chunks_raw).selectExpr(
-        "doc_id", "chunk_idx", "transform(cv, x -> x / __n) AS cvec"
-    )
-    def _unit_docvecs(df, id_alias: str, out: str):
-        raw = df.selectExpr(
-            f"doc_id AS {id_alias}",
-            f"{hash_bucket_counts_expr('toks')} AS v",
-        ).selectExpr("*", f"greatest({l2_norm_expr('v')}, 1E-12D) AS __n")
-        return spread(raw).selectExpr(
-            id_alias, f"transform(v, x -> x / __n) AS {out}"
-        )
-
-    queries = _unit_docvecs(
-        docs.filter(F.col("doc_id") % RAG_QUERY_MOD == 0), "query_doc_id", "qvec"
-    )
-    cents = _unit_docvecs(
-        docs.filter(
-            (F.col("doc_id") % RAG_CENT_MOD == RAG_CENT_OFF)
-            & (F.col("doc_id") < RAG_CENT_MOD * RAG_CENT_CAP)
+    chunks = select_steps(
+        docs,
+        (
+            ("doc_id", f"posexplode({starts}) AS (chunk_idx, st)", "toks"),
+            (
+                "doc_id",
+                "cast(chunk_idx as bigint) AS chunk_idx",
+                f"slice(toks, st, {CHUNK_SIZE}) AS ctoks",
+            ),
+            ("doc_id", "chunk_idx", f"{hash_bucket_counts_expr('ctoks')} AS cv"),
+            ("*", f"greatest({l2_norm_expr('cv')}, 1E-12D) AS __n"),
+            SPREAD,
+            ("doc_id", "chunk_idx", "transform(cv, x -> x / __n) AS cvec"),
         ),
-        "cent_id",
-        "c_v",
+    )
+    queries = select_steps(
+        docs.filter(f"doc_id % {RAG_QUERY_MOD} = 0"),
+        _docvec_steps("query_doc_id", "qvec"),
+    )
+    cents = select_steps(
+        docs.filter(_rag_cent_pred()), _docvec_steps("cent_id", "c_v")
     )
     return chunks, queries, cents
+
+
+def _rag_float_layout(sf_dir: str) -> tuple[int, int] | None:
+    """The float RAG fold's scored-join layout: None (broadcast the
+    probes, the chunk index joins in place without shuffling) up to
+    RAG_BCAST_PROBE_ROWS estimated probe rows; past it the probe side
+    is too big to ship whole, the chunk index moves once through the
+    salted cent_id exchange, and fanout_layout sizes it from the
+    estimated pair count. Value-neutral (pinned by
+    tests/test_ann_recall.py::test_rag_float_dropped_hint_regime_is_value_neutral;
+    plan pinned in tests/test_plans.py)."""
+    n_docs = parquet_rows(sf_dir, "documents")
+    est_probes = (n_docs // RAG_QUERY_MOD) * RAG_N_PROBE if n_docs else 0
+    if est_probes <= RAG_BCAST_PROBE_ROWS:
+        return None
+    est_pairs = (
+        est_probes
+        * (n_docs * RAG_CHUNKS_PER_DOC_EST * RAG_ASSIGN)
+        / max(min(RAG_CENT_CAP, n_docs // RAG_CENT_MOD or 1), 1)
+    )
+    return fanout_layout(est_pairs, RAG_CENT_CAP, ANN_FLOAT_SLAB)
 
 
 def q_rag_retrieval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1540,24 +1410,19 @@ def q_rag_retrieval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactness/serving-compat BASELINE (registered as
     `rag_retrieval_float_baseline`); the SERVING-scale path is the
     quantized cogroup form `q_rag_retrieval_ivf_quant`, the
-    `rag_retrieval` headline since round 10 (8.4x at the sf10
-    replica, and the float fold's final scored-frame window is the
-    shape whose ANN twin DNF'd the 2M-vector decade — SCALE.md
-    rounds 9-10). In this fold chunks are assigned once to their
-    nearest centroid cell (broadcast nested-loop + max-struct argmax,
-    map-side combine — the same no-window shape as `q_ann_ivf_cosine`,
-    which OOM'd as a row_number window at the 100× replica), and each
-    query scores only the chunks inside its nprobe nearest cells.
-    Generalizes the reference's similarity compare
-    (running_validation.py:306-316) from row-pair checking to serving
-    corpus retrieval.
+    `rag_retrieval` headline (8.4x at the sf10 replica; SCALE.md
+    rounds 9-10). Each chunk is indexed in its RAG_ASSIGN nearest
+    centroid cells and each query scores only the chunks inside its
+    nprobe nearest cells, a pair reachable through several cells
+    counting once (operators.ivf). Generalizes the reference's
+    similarity compare (running_validation.py:306-316) from row-pair
+    checking to serving corpus retrieval.
 
-    Scale: the centroid table is O(nlist) and broadcast both times;
-    per-chunk assignment is a narrow map over nlist candidates with
-    the per-chunk argmax collapsed BEFORE the shuffle; query scoring
-    touches |probed cells| / nlist of the chunk index instead of all
-    of it — cost tracks cells probed, not corpus size (SCALE.md has
-    the measured 10× row). Recall vs the brute truth is pinned in
+    Scale: the centroid table is O(nlist) and broadcast; assignment
+    and probing are narrow maps; query scoring touches |probed cells|
+    / nlist of the chunk index instead of all of it — cost tracks
+    cells probed, not corpus size (SCALE.md has the measured 10×
+    row). Recall vs the brute truth is pinned in
     tests/test_ann_recall.py.
 
     Determinism: identical hashed-BoW vectors, sequential-fold
@@ -1565,157 +1430,16 @@ def q_rag_retrieval_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle runs the identical IVF in SQL, so the approximation
     itself is value-checked, exactly as for `ann_topk`'s ivf arm."""
     chunks, queries, cents = _rag_frames(spark, sf_dir)
-    # top-RAG_ASSIGN cells per chunk, ROW-LOCALLY (round 12; history
-    # as in q_ann_ivf_cosine — a rank window OOM'd the 100× replica,
-    # the r4–r11 collect_list aggregation still materialized the
-    # |chunks|·nlist crossJoin rows each carrying the 64-double cvec
-    # and burned ~10 s CPU per sf0.1 run in ObjectHashAggregate): the
-    # ≤nlist centroid table folds to ONE broadcast array row, and
-    # each chunk computes slice(sort_array(transform(...)), 1, k)
-    # inside a projection — the IDENTICAL (a_cos DESC, cent_id ASC)
-    # comparator the aggregated sort used. No aggregation, no
-    # exchange: a narrow map at any scale.
-    # Empty-cents edge (ADVICE r12): this agg always emits ONE row
-    # (empty array), so with zero centroids each chunk/query gets an
-    # empty cells/probed list — rows survive with NULL cent_id from
-    # the posexplode being empty... i.e. no exploded rows at all, so
-    # the final result is empty exactly like the old crossJoin shape;
-    # only the pre-explode intermediate differs (1 row vs 0).
-    carr = F.broadcast(
-        cents.agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("cent_id"), F.col("c_v")))
-            ).alias("cs")
-        )
-    )
-
-    def _top_cells(vec: str, k: int, score_alias: str) -> F.Column:
-        return F.transform(
-            F.slice(
-                F.sort_array(
-                    F.transform(
-                        F.col("cs"),
-                        lambda c: F.struct(
-                            F.round(dot(F.col(vec), c["c_v"]), 6).alias(
-                                score_alias
-                            ),
-                            (-c["cent_id"]).alias("neg_cent"),
-                        ),
-                    ),
-                    asc=False,
-                ),
-                1,
-                k,
-            ),
-            lambda s: -s["neg_cent"],
-        )
-
-    assigned = (
-        chunks.crossJoin(carr)
-        .select(
-            "doc_id",
-            "chunk_idx",
-            "cvec",
-            _top_cells("cvec", RAG_ASSIGN, "a_cos").alias("cells"),
-        )
-        .select(
-            "doc_id",
-            "chunk_idx",
-            "cvec",
-            "cells",
-            F.posexplode("cells").alias("arn", "cent_id"),
-        )
-    )
-    # query → nprobe cells + the full probed set in the SAME pass:
-    # the probed array IS the row-local top-nprobe list, so the old
-    # collect_list re-aggregation + broadcast self-join disappear.
-    probes = (
-        queries.crossJoin(carr)
-        .select(
-            "query_doc_id",
-            "qvec",
-            _top_cells("qvec", RAG_N_PROBE, "p_cos").alias("probed"),
-        )
-        .select(
-            "query_doc_id",
-            "qvec",
-            "probed",
-            F.explode("probed").alias("cent_id"),
-        )
-    )
-    # Two serving regimes (VERDICT r11 ask #5 — the round-11 prose
-    # recipe, now code):
-    # - BROADCAST (small probe side): |queries|·nprobe rows, each
-    #   carrying a d-double qvec, ship to every executor and the
-    #   chunk index joins in place without shuffling.
-    # - DROPPED-HINT (past RAG_BCAST_PROBE_ROWS): the probe side is
-    #   too big to ship whole. The chunk index moves ONCE through a
-    #   cent_id-keyed exchange — and because the scored join is a
-    #   many-to-many fan-out whose output dwarfs its inputs, the
-    #   exchange must be the salted REPARTITION_BY_NUM layout
-    #   (operators.fanout.salted_fanout, sized by fanout_layout),
-    #   NOT whatever AQE coalesces from the small inputs — round 11
-    #   measured exactly that coalesced-fan-out trap DNF the ANN
-    #   twin's 2M-vector decade. Value-neutral: same pairs, same
-    #   scores, same tie-breaks under either regime (pinned by
-    #   tests/test_ann_recall.py::test_rag_float_dropped_hint_regime
-    #   _is_value_neutral); plan pinned in tests/test_plans.py.
-    # A pair reachable through SEVERAL of a chunk's assigned cells
-    # would rank once per reachable cell. Dedup BEFORE scoring, with a
-    # map-side rule instead of a second wide shuffle (a distinct over
-    # the scored pairs doubled the shuffled volume and OOM'd the 100×
-    # replica): each probe row carries the query's full probed-cell
-    # set, each assigned row the chunk's rank-ordered cell list, and a
-    # row survives only when NO lower-rank cell of the chunk is among
-    # this query's probes — the pair is kept exactly once, through the
-    # best reachable cell, for ANY RAG_ASSIGN. Pure expressions, no
-    # extra exchange. (Since round 12 the probed set rides out of the
-    # row-local probe projection directly — no re-aggregation join.)
-    from ..operators.fanout import fanout_layout, parquet_rows, salted_fanout
-
-    n_docs = parquet_rows(sf_dir, "documents")
-    est_probes = (n_docs // RAG_QUERY_MOD) * RAG_N_PROBE if n_docs else 0
-    if est_probes > RAG_BCAST_PROBE_ROWS:
-        # dropped-hint regime (block comment above)
-        est_pairs = (
-            est_probes
-            * (n_docs * RAG_CHUNKS_PER_DOC_EST * RAG_ASSIGN)
-            / max(min(RAG_CENT_CAP, n_docs // RAG_CENT_MOD or 1), 1)
-        )
-        n_salt, parts = fanout_layout(est_pairs, RAG_CENT_CAP, ANN_FLOAT_SLAB)
-        a_s, p_s = salted_fanout(
-            assigned,
-            probes,
-            F.concat_ws("_", "doc_id", "chunk_idx"),
-            n_salt,
-            parts=parts,
-            partition_keys=("cent_id",),
-        )
-        joined = p_s.join(a_s, ["cent_id", "__salt"])
-    else:
-        joined = F.broadcast(probes).join(assigned, "cent_id")
-    scored = (
-        joined
-        .filter(F.col("doc_id") != F.col("query_doc_id"))
-        .filter(
-            ~F.arrays_overlap(
-                F.slice(F.col("cells"), F.lit(1), F.col("arn")),
-                F.col("probed"),
-            )
-        )
-        .select(
-            "query_doc_id",
-            "doc_id",
-            "chunk_idx",
-            F.round(dot(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_doc_id").orderBy(
-        F.col("cos_sim").desc(), "doc_id", "chunk_idx"
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= RAG_TOP_K)
+    carr = ivf.centroid_array(cents, "c_v")
+    return ivf.score_float(
+        ivf.assign_cells(chunks, carr, "cvec", RAG_ASSIGN),
+        ivf.probe_cells(queries, carr, "qvec", RAG_N_PROBE),
+        ["doc_id", "chunk_idx"],
+        "query_doc_id",
+        "cvec",
+        "qvec",
+        RAG_TOP_K,
+        _rag_float_layout(sf_dir),
     )
 
 
@@ -1749,12 +1473,8 @@ def q_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(dot(F.col("qvec"), F.col("cvec")), 6).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_doc_id").orderBy(
-        F.col("cos_sim").desc(), "doc_id", "chunk_idx"
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= RAG_TOP_K)
+    return ivf.top_k(
+        scored, "query_doc_id", "cos_sim", ["doc_id", "chunk_idx"], RAG_TOP_K
     )
 
 
@@ -1878,331 +1598,65 @@ SELECT query_doc_id, doc_id, chunk_idx, cos_sim, rk FROM (
 """
 
 
-# --- e6-integer-dot RAG serving twin (round 9, VERDICT r8 ask #4) -----------
-#
-# The float IVF serving path (q_rag_retrieval_ivf) deliberately keeps
-# its cosine scoring in interpreted JVM higher-order functions: numpy
-# pairwise summation vs the engines' sequential fold differ in the
-# last float64 ulp, which ROUND(cos, 6) can surface, so an Arrow
-# kernel would break the bit-exact oracle (SCALE.md round-7/8). The
-# hier-SemDeDup kernel proved the escape: quantize ONCE to the e6
-# int64 domain — where every dot is order-independent integer
-# arithmetic — and numpy reproduces SQL bit-for-bit. This twin moves
-# ALL THREE pairwise-scoring stages of the IVF pipeline into that
-# domain:
-#   1. chunk→cell assignment: the n×nlist crossJoin + collect_list
-#      top-RAG_ASSIGN becomes ONE narrow Arrow map against the
-#      closure-held centroid matrix (no fan-out, no hash-agg, no
-#      shuffle — the hier routing pattern),
-#   2. query→cell probing: same kernel at k=RAG_N_PROBE,
-#   3. pair scoring: cogrouped by (cell, salt) — each cell's chunks
-#      and probing queries meet once in Python, score as one int64
-#      matmul, and only each slice's per-query local top-K returns
-#      (the measured path: a per-pair Arrow dot ships ~1 KB of
-#      vectors per pair and read SLOWER than the float fold; the
-#      unpruned cogroup then spent more on the 1.2B-row rank window
-#      than on scoring — both in SCALE.md round-9's four-form study;
-#      shipped form is 8.4× the float serving wall at sf10).
-# Ranking ties break identically on both engines (dot DESC, id ASC ≡
-# stable argsort over id-sorted columns), so the DuckDB oracle
-# replays the whole pipeline bit-exactly; recall vs the float brute
-# truth is pinned in tests/test_ann_recall.py. |e6 coord| ≤ 1e6
-# (unit vectors), per-dim product ≤ 1e12, 64-dim dot ≤ 6.4e13 —
-# far inside int64.
+# --- e6-integer-dot serving twins -------------------------------------------
 
 
-def _topk_cells_explode(
-    df: DataFrame,
-    df_vec_col: str,
-    cents_q: DataFrame,
-    id_col: str,
-    vec_col: str,
-    k: int,
-    keep_cells: bool,
-) -> DataFrame:
-    """Append-and-explode the rank-ordered top-k nearest cells by
-    INTEGER dot (dot DESC, id ASC) in ONE mapInPandas pass: for every
-    input row, emit one row per assigned cell with ``cent_id`` (and,
-    when ``keep_cells``, the full rank-ordered ``cells`` array +
-    0-based ``arn`` the redundant-assignment dedup rule needs).
-
-    One Arrow pass replaces the float twin's crossJoin fan-out +
-    collect_list hash-agg (a full n×nlist pair shuffle) with a NARROW
-    map — no Generate node either, which matters twice: Catalyst
-    cannot evaluate a Python UDF embedded in a generator/filter
-    (INTERNAL_ERROR Cannot evaluate expression), and the explode
-    happens batch-vectorized via np.repeat instead of per-row.
-
-    ``cents_q`` must be a CAPPED centroid table (≤ nlist rows — index
-    metadata, the MLlib-centroid collect pattern, same bound as
-    :func:`_nearest_seed_arrow`). Ties: stable argsort over columns
-    pre-sorted by id ≡ row_number(ORDER BY dot DESC, id). Rows whose
-    vector is null (or holds a null element) emit nothing — the SQL
-    twin's cross-join drops them the same way."""
-    rows = (
-        sorted(cents_q.collect(), key=lambda r: r[id_col])
-        if isinstance(cents_q, DataFrame)
-        else list(cents_q)
+def _onestage_cents(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
+    """(cent_id, cx): the e6 centroid table of the ``embeddings`` (ANN)
+    or ``documents`` (RAG) index as a SINGLE-STAGE plan — scan, filter,
+    then the composed pipeline's own projection steps (`_unit_emb`,
+    `_rag_frames`) run without their spread barriers. The barriers keep
+    corpus-sized folds off one core and un-inlined; a ≤nlist-row
+    metadata frame needs neither, and skipping them turns the
+    per-build collect from a 3-stage AQE job (~0.66 s) into one task
+    (~0.15 s). Same expressions in the same order, so the rows are
+    bit-equal (tests/test_plans.py::test_onestage_cent_rows_identical).
+    A zero-norm embedding at a centroid id normalizes to a null vector
+    (or one with null elements); ``ivf.topk_cells_explode`` drops such
+    a centroid, as the oracle's null-filtered CTE drops it."""
+    if table == "embeddings":
+        pred, steps, cid, vec = _ann_cent_pred(), _UNIT_EMB_STEPS, "vec_id", "u"
+    else:
+        pred, cid, vec = _rag_cent_pred(), "cent_id", "c_v"
+        steps = _RAG_DOC_STEPS + _docvec_steps(cid, vec)
+    source = load_table(spark, table, sf_dir).filter(pred)
+    return select_steps(source, steps, barriers=False).selectExpr(
+        f"{cid} AS cent_id", f"{_to_e6_expr(vec)} AS cx"
     )
-    passthrough = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in df.schema)
-    extra = (
-        "cells array<bigint>, arn int, cent_id bigint"
-        if keep_cells
-        else "cent_id bigint"
-    )
-    schema = f"{passthrough}, {extra}"
-    ids = np.array([r[id_col] for r in rows], dtype=np.int64)
-    C = (
-        np.array([list(r[vec_col]) for r in rows], dtype=np.int64)
-        if rows
-        else np.empty((0, 1), dtype=np.int64)
-    )
-    kk = min(k, len(ids))
-    cols = list(df.columns)
-
-    def gen(batches):
-        for pdf in batches:
-            if len(pdf) == 0 or kk == 0:
-                continue
-            idx, M = _stack_int64(pdf[df_vec_col].tolist())
-            if not len(idx):
-                continue
-            S = M @ C.T  # exact int64
-            order = np.argsort(-S, axis=1, kind="stable")[:, :kk]
-            cellmat = ids[order]
-            rep = pdf.iloc[idx].reset_index(drop=True)
-            out = rep.loc[np.repeat(np.arange(len(rep)), kk)].reset_index(
-                drop=True
-            )
-            if keep_cells:
-                lists = [row.tolist() for row in cellmat]
-                out["cells"] = [
-                    lists[i] for i in np.repeat(np.arange(len(lists)), kk)
-                ]
-                out["arn"] = np.tile(np.arange(kk, dtype=np.int32), len(rep))
-            out["cent_id"] = cellmat.ravel()
-            yield out
-
-    return df.mapInPandas(gen, schema)
-
-
-def _score_cell_cogroup(chunk_pdf: pd.DataFrame, probe_pdf: pd.DataFrame):
-    """Per-cell pair scoring for the quantized serving twin: one
-    exact-int64 matmul of the cell's chunk matrix against the cell's
-    probing-query matrix, with the own-document exclusion and the
-    best-reachable-cell dedup rule applied as boolean masks BEFORE
-    any pair row materializes. Only the surviving
-    (query, doc, chunk, sim) id-quadruples leave Python — the 64-dim
-    vectors never ship per pair (the per-pair ArrowEvalPython form
-    measured SLOWER than the interpreted float fold at sf1: ~1 KB of
-    vector transfer per pair dwarfed the arithmetic win; SCALE.md
-    round 9). Row-sliced so the score matrix stays ~32 MB however
-    large the cell."""
-    empty = {
-        "query_doc_id": np.empty(0, dtype=np.int64),
-        "doc_id": np.empty(0, dtype=np.int64),
-        "chunk_idx": np.empty(0, dtype=np.int64),
-        "sim_e12": np.empty(0, dtype=np.int64),
-    }
-    if len(chunk_pdf) == 0 or len(probe_pdf) == 0:
-        return pd.DataFrame(empty)
-    X = np.array(chunk_pdf["x"].tolist(), dtype=np.int64)
-    Q = np.array(probe_pdf["qx"].tolist(), dtype=np.int64)
-    dids = chunk_pdf["doc_id"].to_numpy()
-    cidx = chunk_pdf["chunk_idx"].to_numpy()
-    arn = chunk_pdf["arn"].to_numpy()
-    cells = chunk_pdf["cells"].tolist()
-    qids = probe_pdf["query_doc_id"].to_numpy()
-    probed = probe_pdf["probed"].tolist()
-    P = np.full((len(probed), max(len(p) for p in probed)), -1, dtype=np.int64)
-    for j, p in enumerate(probed):
-        P[j, : len(p)] = p
-    nq = len(qids)
-    step = max(1, (1 << 22) // max(nq, 1))
-    outs = []
-    for lo in range(0, len(X), step):
-        hi = min(lo + step, len(X))
-        S = X[lo:hi] @ Q.T  # exact int64
-        keep = dids[lo:hi, None] != qids[None, :]
-        # drop a pair when a LOWER-rank assigned cell of the chunk is
-        # among this query's probes — the pair is then already served
-        # through that better cell (same rule as the float twin's
-        # arrays_overlap(slice(cells, 1, arn), probed))
-        for r in range(1, int(arn[lo:hi].max(initial=0)) + 1):
-            rows = np.flatnonzero(arn[lo:hi] >= r)
-            if not len(rows):
-                continue
-            prev = np.array(
-                [cells[lo + i][r - 1] for i in rows], dtype=np.int64
-            )
-            hit = (prev[:, None, None] == P[None, :, :]).any(-1)
-            keep[rows] &= ~hit
-        ci, qi = np.nonzero(keep)
-        if not len(ci):
-            continue
-        q_out = qids[qi]
-        d_out = dids[lo:hi][ci]
-        c_out = cidx[lo:hi][ci]
-        s_out = S[ci, qi]
-        # Emit only each query's LOCAL top-RAG_TOP_K from this slice:
-        # the global top-k per query must come from some group's local
-        # top-k (every pair lives in exactly one group/slice), so
-        # pre-pruning here is value-neutral — and it is the scale
-        # lever: at the sf10 replica the scored frame is 1.22B pairs,
-        # and feeding them all to the JVM rank window cost more than
-        # the scoring itself (82 s scoring vs 233 s total; SCALE.md
-        # round 9). Exact same order as the final window: sim DESC,
-        # doc, chunk.
-        order = np.lexsort((c_out, d_out, -s_out, q_out))
-        qs = q_out[order]
-        pos = np.arange(len(qs))
-        first = np.r_[True, qs[1:] != qs[:-1]]
-        start = np.maximum.accumulate(np.where(first, pos, 0))
-        top = order[(pos - start) < RAG_TOP_K]
-        outs.append(
-            pd.DataFrame(
-                {
-                    "query_doc_id": q_out[top],
-                    "doc_id": d_out[top],
-                    "chunk_idx": c_out[top],
-                    "sim_e12": s_out[top],
-                }
-            )
-        )
-    return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(empty)
-
-
-def _rag_cent_rows_onestage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The quant serving path's (cent_id, cx) centroid table as a
-    SINGLE-STAGE plan: scan → filter → chained projections, no spread
-    exchanges. Expression-identical to
-    ``_rag_frames()[2].selectExpr(cent_id, _to_e6_expr(c_v))`` — same
-    tokenize, same md5 histogram fold, same norm/divide/e6 ops in the
-    same order — so the collected rows are bit-equal (pinned by
-    tests/test_plans.py::test_onestage_cent_rows_identical). The
-    spread barriers exist to keep corpus-sized folds off one core and
-    un-inlined; a ≤nlist-row index-metadata frame needs neither, and
-    dropping them cuts the per-build driver collect from a 3-stage
-    AQE job (~0.66 s) to one task (~0.15 s). The norm fold DOES
-    inline into the division lambda here (O(d²) per row — trivial at
-    d=64); the expensive md5 fold stays un-inlined because it is
-    referenced more than once."""
-    from .text import hash_bucket_counts_expr
-
-    toks_expr = "filter(split(lower(text), ' '), x -> x != '')"
-    return (
-        load_table(spark, "documents", sf_dir)
-        .select("doc_id", "text")
-        .filter(
-            (F.col("doc_id") % RAG_CENT_MOD == RAG_CENT_OFF)
-            & (F.col("doc_id") < RAG_CENT_MOD * RAG_CENT_CAP)
-        )
-        .selectExpr("doc_id AS cent_id", f"{toks_expr} AS toks")
-        .selectExpr("cent_id", f"{hash_bucket_counts_expr('toks')} AS v")
-        .selectExpr(
-            "cent_id", "v", f"greatest({l2_norm_expr('v')}, 1E-12D) AS __n"
-        )
-        .selectExpr("cent_id", "transform(v, x -> x / __n) AS c_v")
-        .selectExpr("cent_id", f"{_to_e6_expr('c_v')} AS cx")
-    )
-
-
-def _rag_quant_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The quantized twin's scored pair frame, already pruned to each
-    group-slice's per-query local top-RAG_TOP_K (value-neutral — see
-    the in-kernel comment; the SCALE.md round-9 pair counts were
-    measured with the pruning disabled). Factored out so the scale
-    study can instrument scoring without the final rank window."""
-    chunks, queries, _ = _rag_frames(spark, sf_dir)
-    cq = chunks.selectExpr(
-        "doc_id", "chunk_idx", f"{_to_e6_expr('cvec')} AS x"
-    )
-    qq = queries.selectExpr("query_doc_id", f"{_to_e6_expr('qvec')} AS qx")
-    # ONE collect of the capped centroid table serves both kernel
-    # builds — via the SINGLE-STAGE subtree (round 13): the composed
-    # _rag_frames cents path runs a 3-stage AQE job per collect (two
-    # spread exchanges protecting folds that matter only at corpus
-    # row counts, ~0.66 s/run); for the ≤nlist-row centroid frame a
-    # scan→project plan collects the identical rows in ~0.15 s
-    # (Catalyst keeps the md5 histogram fold `v` un-inlined — it is
-    # referenced more than once, so only the cheap norm fold inlines
-    # into the division lambda). Value identity pinned by
-    # tests/test_plans.py::test_onestage_cent_rows_identical.
-    cent_rows = sorted(
-        _rag_cent_rows_onestage(spark, sf_dir).collect(),
-        key=lambda r: r["cent_id"],
-    )
-    # 1+2: assignment and probing as narrow Arrow map-explodes (no
-    # crossJoin, no hash-agg, no Generate)
-    assigned = _topk_cells_explode(
-        cq, "x", cent_rows, "cent_id", "cx", RAG_ASSIGN, keep_cells=True
-    )
-    probes = _topk_cells_explode(
-        qq, "qx", cent_rows, "cent_id", "cx", RAG_N_PROBE, keep_cells=True
-    ).select(
-        "query_doc_id", "qx", F.col("cells").alias("probed"), "cent_id"
-    )
-    # 3: pair scoring — cogrouped by (cell, salt): each cell's chunks
-    # and probing queries meet ONCE in Python (each vector crosses
-    # Arrow once per assignment, never once per pair) and are scored
-    # as one exact-int64 matmul, dedup + own-doc masks applied before
-    # any pair row materializes. The cent_id shuffle moves the chunk
-    # index once — the same narrow n-row exchange the float twin's
-    # documented past-broadcast-limit fallback uses. The SALT splits
-    # each cell's chunk rows into bounded buckets (probes replicate
-    # to every bucket — query-sized, cheap): the cogrouped Arrow
-    # runner ships each group as ONE record batch, and an unsalted
-    # skewed cell (hashed-BoW cells are Zipfian) hit a single 2 GB
-    # batch allocation = OutOfDirectMemory at the sf10 replica
-    # (SCALE.md round 9). Each chunk lands in exactly one bucket, so
-    # every pair is still scored exactly once.
-    from ..operators.fanout import cogroup_parts, salted_fanout
-
-    # parts: pin the cogroup's exchange at the configured shuffle
-    # width (REPARTITION_BY_NUM — AQE cannot coalesce it). The group
-    # count (nlist × salt) times per-group Python latency is the
-    # stage's real cost and is invisible to AQE's byte-based sizing:
-    # unpinned at sf0.1 the ~2 MB shuffle coalesced to 2 partitions
-    # and the 512 Python groups ran serialized on 2 cores (2.15 s of
-    # the 4.6 s warm wall — round-12 stage profile). Value-neutral:
-    # partitioning never changes cogroup membership.
-    ak, pk = salted_fanout(
-        assigned,
-        probes,
-        F.concat_ws("_", "doc_id", "chunk_idx"),
-        RAG_COGROUP_SALT,
-        parts=cogroup_parts(spark),
-        partition_keys=("cent_id",),
-    )
-    scored = (
-        ak.groupby("cent_id", "__salt")
-        .cogroup(pk.groupby("cent_id", "__salt"))
-        .applyInPandas(
-            _score_cell_cogroup,
-            "query_doc_id bigint, doc_id bigint, chunk_idx bigint,"
-            " sim_e12 bigint",
-        )
-    )
-    return scored
 
 
 def q_rag_retrieval_ivf_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-served RAG retrieval scored in the e6-integer-dot domain —
-    the Arrow-kernel serving twin of `q_rag_retrieval_ivf` (module
-    comment above has the full design rationale). Same corpus, same
-    IVF geometry, same redundant-assignment dedup rule; the score
-    column is the raw e12-scale integer dot (`sim_e12` — cosine
-    ×1e12 up to quantization), whose ranking the recall gate checks
-    against the float truth. Generalizes the reference's similarity
-    compare (running_validation.py:306-316) the same way the float
-    twin does."""
-    scored = _rag_quant_scored(spark, sf_dir)
-    w = Window.partitionBy("query_doc_id").orderBy(
-        F.col("sim_e12").desc(), "doc_id", "chunk_idx"
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= RAG_TOP_K)
+    the Arrow-kernel serving twin of `q_rag_retrieval_ivf`: same
+    corpus, same IVF geometry, same redundant-assignment dedup rule.
+    The float fold keeps its cosine in JVM higher-order functions
+    because numpy's pairwise summation and the engines' sequential
+    fold differ in the last ulp, which ROUND(cos, 6) can surface; in
+    the e6 domain every dot is exact integer arithmetic, so numpy
+    reproduces SQL bit-for-bit and all three pairwise stages (assign,
+    probe, score) move into Arrow kernels (operators.ivf). Measured
+    8.4× the float serving wall at the sf10 replica (SCALE.md round
+    9). The score column is the raw e12-scale integer dot (`sim_e12`
+    — cosine ×1e12 up to quantization), whose ranking the recall
+    gate checks against the float truth. Generalizes the reference's
+    similarity compare (running_validation.py:306-316) the same way
+    the float twin does."""
+    chunks, queries, _ = _rag_frames(spark, sf_dir)
+    # one collect of the capped centroid table serves both kernels
+    cents = _onestage_cents(spark, sf_dir, "documents").collect()
+    cq = chunks.selectExpr("doc_id", "chunk_idx", f"{_to_e6_expr('cvec')} AS x")
+    qq = queries.selectExpr("query_doc_id", f"{_to_e6_expr('qvec')} AS qx")
+    return ivf.score_e6(
+        ivf.topk_cells_explode(cq, "x", cents, RAG_ASSIGN, keep_cells=True),
+        ivf.topk_cells_explode(
+            qq, "qx", cents, RAG_N_PROBE, keep_cells=True
+        ).selectExpr("query_doc_id", "qx", "cells AS probed", "cent_id"),
+        ["doc_id", "chunk_idx"],
+        "query_doc_id",
+        "sim_e12",
+        RAG_TOP_K,
+        RAG_COGROUP_SALT,
+        cogroup_parts(spark),
     )
 
 
@@ -2264,191 +1718,45 @@ SELECT query_doc_id, doc_id, chunk_idx, sim_e12, rk FROM (
 """
 
 
-# --- e6-integer-dot ANN serving twin (round 10, VERDICT r9 ask #2) ----------
-#
-# The round-9 RAG study's lesson (quantize once to the e6 int64
-# domain, meet per cell in ONE cogrouped Arrow matmul, emit only each
-# slice's per-query local top-k) applied to the embeddings-table IVF
-# arm, SHIPPED because the measured crossover is real (SCALE.md
-# round 10): at the 100x replica (100k vectors, 1000 queries, 4.97M
-# scored pairs) the float arm reads 8.93 s warm and this twin 2.84 s
-# (3.1x) with top-10 set agreement 1.0; at 10k vectors 4.04 vs 1.73
-# (2.3x, agreement 0.999); at the 2k-vector fixture the two are at
-# parity (fixed Python-stage costs, the same pre-adjudicated overhead
-# regime as the RAG twin). Unlike RAG, the win here is split between
-# scoring AND assignment: the float arm's n x nlist crossJoin
-# fan-out + max(struct) hash-agg carries the 64-dim vector through
-# an exchange, while `_topk_cells_explode` is one narrow Arrow map.
-# Assignment is k=1 (each vector lives in exactly ONE cell), so the
-# RAG twin's redundant-assignment dedup rule is unnecessary here.
-
 ANN_COGROUP_SALT = _geo("ANN_COGROUP_SALT", 4)
-
-
-def _ann_quant_score_cogroup(vec_pdf: pd.DataFrame, probe_pdf: pd.DataFrame):
-    """Per-(cell, salt) pair scoring: one exact-int64 matmul of the
-    slice's vectors against the cell's probing queries, own-vector
-    mask applied before any pair row materializes, and only the
-    slice's per-query local top-TOP_K id-triples leave Python (the
-    global top-k per query must come from some slice's local top-k —
-    every pair lives in exactly one (cell, salt, row-slice) group).
-    Row-sliced like :func:`_score_cell_cogroup` so the score matrix
-    stays ~32 MB however large the cell."""
-    empty = {
-        "query_id": np.empty(0, dtype=np.int64),
-        "vec_id": np.empty(0, dtype=np.int64),
-        "s_e12": np.empty(0, dtype=np.int64),
-    }
-    if len(vec_pdf) == 0 or len(probe_pdf) == 0:
-        return pd.DataFrame(empty)
-    X = np.array(vec_pdf["x"].tolist(), dtype=np.int64)
-    Q = np.array(probe_pdf["qx"].tolist(), dtype=np.int64)
-    vids = vec_pdf["vec_id"].to_numpy()
-    qids = probe_pdf["query_id"].to_numpy()
-    nq = len(qids)
-    step = max(1, (1 << 22) // max(nq, 1))
-    outs = []
-    for lo in range(0, len(X), step):
-        hi = min(lo + step, len(X))
-        S = X[lo:hi] @ Q.T  # exact int64
-        vi, qi = np.nonzero(vids[lo:hi, None] != qids[None, :])
-        if not len(vi):
-            continue
-        q_out = qids[qi]
-        v_out = vids[lo:hi][vi]
-        s_out = S[vi, qi]
-        # local top-TOP_K per query, exact same order as the final
-        # window: s DESC, vec_id ASC
-        order = np.lexsort((v_out, -s_out, q_out))
-        qs = q_out[order]
-        pos = np.arange(len(qs))
-        first = np.r_[True, qs[1:] != qs[:-1]]
-        start = np.maximum.accumulate(np.where(first, pos, 0))
-        top = order[(pos - start) < TOP_K]
-        outs.append(
-            pd.DataFrame(
-                {
-                    "query_id": q_out[top],
-                    "vec_id": v_out[top],
-                    "s_e12": s_out[top],
-                }
-            )
-        )
-    return pd.concat(outs, ignore_index=True) if outs else pd.DataFrame(empty)
-
-
-def _ann_cent_frame_onestage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_ann_ivf_quant's (cent_id, cx) centroid table as a
-    single-stage scan→filter→project plan — expression-identical to
-    filtering the composed ``_unit_emb → _to_e6`` pipeline (same norm
-    fold, same division, same e6 ops in the same order), so the
-    collected rows are bit-equal; see _rag_cent_rows_onestage for the
-    rationale and tests/test_plans.py::
-    test_onestage_cent_rows_identical for the pin."""
-    return (
-        load_table(spark, "embeddings", sf_dir)
-        .select("vec_id", "embedding")
-        .filter(
-            (F.col("vec_id") % CENTROID_MOD == CENTROID_OFF)
-            & (F.col("vec_id") < CENTROID_MOD * CENTROID_CAP)
-        )
-        .selectExpr(
-            "vec_id", "embedding", f"{l2_norm_expr('embedding')} AS __nrm"
-        )
-        .selectExpr(
-            "vec_id",
-            "transform(embedding, x -> cast(x as double) / __nrm) AS u",
-        )
-        .selectExpr("vec_id AS cent_id", f"{_to_e6_expr('u')} AS cx")
-        .filter(
-            F.col("cx").isNotNull() & ~F.exists("cx", lambda e: e.isNull())
-        )
-    )
 
 
 def q_ann_ivf_quant(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN search scored in the e6-integer-dot domain — the
-    Arrow-kernel serving twin of `q_ann_ivf_cosine` (block comment
-    above has the measured crossover; the float arm stays the
-    cosine-scale form inside `ann_topk`'s tagged union). Same
-    geometry (nlist=CENTROID_CAP, nprobe=N_PROBE, modular centroid
-    selection), same tie-breaks; the score column is the raw
-    e12-scale integer dot (`s_e12` — cosine x1e12 up to
+    Arrow-kernel serving twin of `q_ann_ivf_cosine` (the float arm
+    stays the cosine-scale form inside `ann_topk`'s tagged union).
+    Same geometry (nlist=CENTROID_CAP, nprobe=N_PROBE, modular
+    centroid selection), same tie-breaks; the score column is the
+    raw e12-scale integer dot (`s_e12` — cosine x1e12 up to
     quantization), and the DuckDB oracle replays the whole pipeline
-    bit-exactly (order-independent integer arithmetic, the
-    `unit_rag_retrieval_quant`-established pattern).
-    tests/test_ann_recall.py pins top-k agreement with the float arm.
+    bit-exactly. tests/test_ann_recall.py pins top-k agreement with
+    the float arm.
 
-    Plan: two narrow MapInPandas passes (assignment k=1, probing
-    k=nprobe) against the collected <=nlist centroid table (the
-    MLlib-centroid pattern — no crossJoin, no hash-agg), then one
-    salted FlatMapCoGroupsInPandas matmul; the only corpus exchange
-    is the cogroup's cent_id shuffle. The salt splits a cell's
-    vectors into bounded buckets (probes replicate per bucket —
-    query-sized, cheap) so a skewed cell can never hit the
-    single-2GB-Arrow-batch hazard the RAG study measured; embeddings
-    cells are near-uniform, but a production corpus's need not be.
+    Shipped because the measured crossover is real (SCALE.md round
+    10): at the 100x replica (100k vectors, 1000 queries, 4.97M
+    scored pairs) the float arm read 8.93 s warm and this twin 2.84 s
+    with top-10 set agreement 1.0; at the 2k-vector fixture the two
+    are at parity. Plan: two narrow MapInPandas passes (assignment
+    k=1, probing k=nprobe) against the collected <=nlist centroid
+    table, then one salted FlatMapCoGroupsInPandas matmul; the only
+    corpus exchange is the cogroup's cent_id shuffle. Each vector
+    lives in exactly one cell, so no dedup rule applies.
 
     Generalizes the reference's similarity compare
     (running_validation.py:306-316) to indexed corpus search, like
     the float twin it shadows."""
-    emb = _unit_emb(spark, sf_dir).selectExpr(
-        "vec_id", f"{_to_e6_expr('u')} AS x"
-    )
-    # The null filter mirrors the oracle's null-filtered uq CTE
-    # (ADVICE r10): a zero-norm embedding at a centroid id is
-    # normalized to a null vector (or one with null elements) by
-    # _unit_emb, which the oracle silently drops from cents — without
-    # the filter the collected row would crash _topk_cells_explode's
-    # np.array build instead. (_stack_int64 already drops null ROWS
-    # symmetrically on the assignment/query sides.)
-    #
-    # Collected via the SINGLE-STAGE subtree (round 13, same move as
-    # _rag_cent_rows_onestage): scan → filter → projections, no spread
-    # exchange — expression-identical ops in the same order, so the
-    # rows are bit-equal (pinned by tests/test_plans.py::
-    # test_onestage_cent_rows_identical).
-    # ONE collect of the capped (<=nlist) centroid table serves both
-    # kernel builds
-    cent_rows = sorted(
-        _ann_cent_frame_onestage(spark, sf_dir).collect(),
-        key=lambda r: r["cent_id"],
-    )
-    assigned = _topk_cells_explode(
-        emb, "x", cent_rows, "cent_id", "cx", 1, keep_cells=False
-    )
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("x").alias("qx")
-    )
-    probes = _topk_cells_explode(
-        queries, "qx", cent_rows, "cent_id", "cx", N_PROBE, keep_cells=False
-    )
-    from ..operators.fanout import cogroup_parts, salted_fanout
-
-    # parts: same pinned-width cogroup layout as _rag_quant_scored —
-    # AQE coalesces this ~MB-scale exchange by bytes and serializes
-    # the per-cell Python groups onto a couple of cores (round-12
-    # stage profile); see cogroup_parts for the sizing rationale.
-    ak, pk = salted_fanout(
-        assigned,
-        probes,
-        F.col("vec_id").cast("string"),
+    emb = _unit_emb(spark, sf_dir).selectExpr("vec_id", f"{_to_e6_expr('u')} AS x")
+    # one collect of the capped centroid table serves both kernels
+    cents = _onestage_cents(spark, sf_dir, "embeddings").collect()
+    return ivf.score_e6(
+        ivf.topk_cells_explode(emb, "x", cents, 1),
+        ivf.topk_cells_explode(_ann_queries(emb, "x", "qx"), "qx", cents, N_PROBE),
+        ["vec_id"],
+        "query_id",
+        "s_e12",
+        TOP_K,
         ANN_COGROUP_SALT,
-        parts=cogroup_parts(spark),
-        partition_keys=("cent_id",),
-    )
-    scored = (
-        ak.groupby("cent_id", "__salt")
-        .cogroup(pk.groupby("cent_id", "__salt"))
-        .applyInPandas(
-            _ann_quant_score_cogroup,
-            "query_id bigint, vec_id bigint, s_e12 bigint",
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("s_e12").desc(), "vec_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
+        cogroup_parts(spark),
     )
 
 
@@ -2629,24 +1937,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     here — ADC approximates cosine only if the encoded vectors are
     unit-normalized)."""
     emb = _unit_emb(spark, sf_dir)
-
-    # IVF cells over unit vectors (same selection as q_ann_ivf_cosine)
-    cents = emb.filter(
-        (F.col("vec_id") % CENTROID_MOD == CENTROID_OFF)
-        & (F.col("vec_id") < CENTROID_MOD * CENTROID_CAP)
-    ).select(F.col("vec_id").alias("cent_id"), F.col("u").alias("c_u"))
-    assigned = (
-        emb.crossJoin(F.broadcast(cents))
-        .select(
-            "vec_id", "u", "cent_id",
-            F.round(dot(F.col("u"), F.col("c_u")), 6).alias("a_cos"),
-        )
-        .groupBy("vec_id")
-        .agg(F.max(F.struct(
-            F.col("a_cos"), (-F.col("cent_id")).alias("neg"), F.col("u").alias("u"),
-        )).alias("b"))
-        .select("vec_id", F.col("b.u").alias("u"), (-F.col("b.neg")).alias("cent_id"))
-    )
+    carr, assigned = _ann_float_index(emb)
 
     # PQ codebook over unit subvectors (same selection as q_pq_quantize)
     subs = assigned.selectExpr(
@@ -2671,18 +1962,8 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # queries: probe cells + ADC look-up table (query-sub · codeword)
-    queries = emb.filter(F.col("vec_id") % QUERY_MOD == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("u").alias("q_u")
-    )
-    p_w = Window.partitionBy("query_id").orderBy(F.col("p_cos").desc(), "cent_id")
-    probes = (
-        queries.crossJoin(F.broadcast(cents))
-        .select("query_id", "q_u", "cent_id",
-                F.round(dot(F.col("q_u"), F.col("c_u")), 6).alias("p_cos"))
-        .withColumn("prn", F.row_number().over(p_w))
-        .filter(F.col("prn") <= N_PROBE)
-        .select("query_id", "q_u", "cent_id")
-    )
+    queries = _ann_queries(emb)
+    probes = ivf.probe_cells(queries, carr, "q_u", N_PROBE)
     qsubs = queries.selectExpr(
         "query_id",
         f"posexplode(transform(sequence(0, {PQ_M - 1}), "
@@ -2710,13 +1991,8 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("s_e6").cast("double") / F.lit(1e6)).alias("approx_cos"),
         )
     )
-    s_w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(s_w).cast("bigint"))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "vec_id", F.round("approx_cos", 6).alias("approx_cos"), "rk")
+    return ivf.top_k(scored, "query_id", "approx_cos", ["vec_id"], TOP_K).select(
+        "query_id", "vec_id", F.round("approx_cos", 6).alias("approx_cos"), "rk"
     )
 
 

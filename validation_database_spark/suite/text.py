@@ -2092,6 +2092,12 @@ def q_line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exchange carried the kept text in both shapes.
     from pyspark.sql import Window
 
+    # min ≠ max over the lkey partition is "≥ 2 distinct docs" only
+    # at a threshold of 2; any other LINE_MIN_OCCUR needs the count.
+    assert LINE_MIN_OCCUR == 2
+    # Skew: a whole lkey partition lands in one task, so a single hot
+    # line (a footer in every doc) is one corpus-sized sort partition;
+    # AQE skew-join splitting does not apply to a window.
     wl = Window.partitionBy("lkey")
     flagged = (
         lines.withColumn("__dmin", F.min("doc_id").over(wl))
@@ -2831,6 +2837,9 @@ def q_exact_substr_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     spans = chunked_span_table(base)
     from pyspark.sql import Window
 
+    # min ≠ max over the h partition is "≥ 2 distinct docs", the same
+    # threshold-2 rewrite as the line dedup's.
+    assert LINE_MIN_OCCUR == 2
     wh = Window.partitionBy("h")
     dup = (
         spans.withColumn("__dmin", F.min("doc_id").over(wh))

@@ -25,6 +25,24 @@ def spread(df: DataFrame, partitions: int | None = None) -> DataFrame:
     return df.repartition(n)
 
 
+SPREAD = "spread"
+
+
+def select_steps(df: DataFrame, steps, barriers: bool = True) -> DataFrame:
+    """Apply ``steps`` in order: each a tuple of Spark-SQL expressions
+    for one ``selectExpr``, or the :data:`SPREAD` marker for a
+    :func:`spread` barrier, skipped when ``barriers`` is False. One
+    list of strings so renders a corpus-sized pipeline, whose barriers
+    keep expensive folds off one core and out of inlined lambdas, and
+    the same pipeline over a handful of rows as a single stage."""
+    for step in steps:
+        if step != SPREAD:
+            df = df.selectExpr(*step)
+        elif barriers:
+            df = spread(df)
+    return df
+
+
 # Persisted frames registered by operators that NEED the cache to
 # survive until the caller materializes the result — either for
 # partition-assignment determinism (the two-pass rank helper in
