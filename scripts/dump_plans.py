@@ -163,14 +163,17 @@ SHOWCASE = {
     "(LeftSemi, plan-pinned) below the basket self-join — inert on the "
     "dense fixture, 4-8x pair-space cut on a long-tail catalog "
     "(scripts/apriori_longtail.py)",
-    "unit_semantic_dedup_hier": "hierarchical SemDeDup (scale path, "
-    "round-8 form): md5-hash-sampled fine seeds (immune to id "
-    "structure), 256 coarse seeds collapsed to ONE broadcast array "
-    "row, every argmin a narrow projection (array_min over "
-    "struct(sqdist, id) — no per-candidate fan-out, no hash-agg, "
-    "no shuffle in routing), pair space bounded by ~50-vector fine "
-    "clusters — measured slope ≤0.32 on the top decade where the "
-    "exact twin is quadratic either way",
+    "unit_semantic_dedup_hier": "hierarchical SemDeDup (scale path): "
+    "md5-hash-sampled fine seeds (immune to id structure); the ≤256 "
+    "coarse seeds ride in an exact-int64 Arrow kernel (ArrowEvalPython) "
+    "that runs ONCE per vector, in the pinned vector → coarse-cell pass "
+    "the fine seeds' cells are also read from (one nearest(...) result "
+    "id in the plan); the fine argmin is a narrow projection (array_min "
+    "over struct(sqdist, id)) against broadcast per-cell seed lists — no "
+    "per-candidate fan-out, no join back to the unit vectors, no corpus "
+    "shuffle in routing; pair space bounded by ~50-vector fine clusters "
+    "— measured slope ≤0.32 on the top decade where the exact twin is "
+    "quadratic either way",
     "unit_ann_ivf_quant": "e6-integer-dot IVF ANN serving twin (round 10): "
     "assignment (k=1) + probing as narrow MapInPandas passes against the "
     "closure-held centroid table — replacing the float arm's n x nlist "

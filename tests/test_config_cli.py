@@ -191,6 +191,7 @@ def test_bad_config_value_names_the_key(spark, sf_dir, tmp_path, key, value):
     "key, value, missing",
     [
         ("unique_key", ["o_orderkey", "o_nokey"], "o_nokey"),
+        ("unique_key", "o_nokey", "o_nokey"),
         ("check_column", "o_nocheck", "o_nocheck"),
         ("dbB_database_date_column", "o_nodate", "o_nodate"),
     ],
@@ -204,7 +205,9 @@ def test_missing_source_column_names_source_and_column(
     cfg = _base_config(sf_dir, tmp_path)
     cfg.update({key: value, "start_date": "1995-01-01", "end_date": "1996-01-01"})
     jobs = spark.sparkContext.statusTracker()
-    spark.sparkContext.setJobGroup("missing-column", "missing-column")
+    # one group per case: the tracker keeps a group's jobs across cases
+    group = f"missing-column-{tmp_path.name}"
+    spark.sparkContext.setJobGroup(group, group)
     try:
         with pytest.raises(ValueError, match=f"'{missing}'") as err:
             run_validation(spark, cfg)
@@ -217,7 +220,7 @@ def test_missing_source_column_names_source_and_column(
     # no job beyond the schema reads of the sources loaded so far
     # (spark.read.parquet runs at most two per source)
     loaded = 2 if failing == "dbB" else 1
-    assert len(jobs.getJobIdsForGroup("missing-column")) <= 2 * loaded
+    assert len(jobs.getJobIdsForGroup(group)) <= 2 * loaded
 
 
 _ID = "CAST(o_orderkey AS STRING)"

@@ -137,3 +137,43 @@ def test_semantic_dedup_stage_routes_through_hier_scale_path(
     out_ids = {r.doc_id for r in run.result.select("doc_id").collect()}
     assert out_ids == doc_ids & kept
     assert run.counts["semantic_dedup"] == len(out_ids)
+
+
+def test_rewritten_corpus_gets_a_fresh_curation(spark, sf_dir, tmp_path):
+    """Two exporting runs in one process over the same corpus path
+    curate what the files hold at each run: the second run, over a
+    corpus rewritten so every text is identical, keeps one document,
+    as a fresh process does, instead of reusing the first run's cached
+    shingles and bands; and the runs leave nothing cached behind."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from validation_database_spark import util
+
+    util.release_pins()
+    spark.catalog.clearCache()
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    docs = pq.read_table(f"{sf_dir}/documents.parquet")
+    pq.write_table(docs, str(corpus / "documents.parquet"))
+    cfg = {
+        "input": {"sf_dir": str(corpus)},
+        "stages": {"near_dedup": True},
+        "output": {"dir": str(tmp_path / "out")},
+        "report_counts": False,
+    }
+
+    def exported():
+        return spark.read.json(str(tmp_path / "out" / "examples")).select("doc_id")
+
+    run_curation(spark, cfg)
+    assert exported().count() > 1
+    same = pa.array([docs.column("text")[0].as_py()] * docs.num_rows)
+    pq.write_table(
+        docs.set_column(docs.schema.get_field_index("text"), "text", same),
+        str(corpus / "documents.parquet"),
+    )
+    run_curation(spark, cfg)
+    assert [r.doc_id for r in exported().collect()] == [min(docs.column("doc_id").to_pylist())]
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert not util._PINNED

@@ -11,6 +11,7 @@ round the expanded x·x + c·c − 2x·c form)."""
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
@@ -311,3 +312,34 @@ def test_memo_evicts_lru_not_wholesale(spark):
     assert _nearest_seed_arrow(seed_tables[7], "sid", "sx") is kernels[7]
     assert _nearest_seed_arrow(seed_tables[1], "sid", "sx") is not kernels[1]
     _NEAREST_KERNEL_MEMO.clear()
+
+
+def test_hier_frame_runs_the_kernel_once_per_vector(spark, sf_dir, monkeypatch):
+    """One materialization of semantic_dedup_hier_frame feeds the
+    nearest-seed kernel each vector exactly once: the fine seeds'
+    routing is read from the vectors' pass, and neither a second
+    consumer nor the null filter the optimizer infers from the ccid
+    join evaluates it again."""
+    from validation_database_spark import util
+    from validation_database_spark.sources import load_table
+    from validation_database_spark.suite import similarity as S
+
+    seen = spark.sparkContext.accumulator(0)
+    real = S._nearest_seed_arrow
+
+    def counting(seeds, id_col, vec_col, _chunk=None):
+        inner = real(seeds, id_col, vec_col, _chunk).func
+
+        @F.pandas_udf("bigint")
+        def nearest(xs: pd.Series) -> pd.Series:
+            seen.add(len(xs))
+            return inner(xs)
+
+        return nearest
+
+    monkeypatch.setattr(S, "_nearest_seed_arrow", counting)
+    vecs = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
+    n = vecs.count()
+    with util.pin_scope():
+        S.semantic_dedup_hier_frame(vecs).write.format("noop").mode("overwrite").save()
+    assert seen.value == n

@@ -114,8 +114,9 @@ def _validate(config: dict[str, Any]) -> None:
 def _key_columns(config: dict[str, Any]) -> list[str] | None:
     """The reference's key name is ``composite_id_columns``
     (reference config.yaml:19); ``unique_key`` is accepted as an
-    alias."""
-    return config.get("composite_id_columns") or config.get("unique_key")
+    alias. A scalar names one column (``unique_key: o_orderkey``)."""
+    keys = config.get("composite_id_columns") or config.get("unique_key")
+    return [keys] if isinstance(keys, str) else keys
 
 
 def _source_df(spark: SparkSession, config: dict[str, Any], db: str) -> DataFrame:

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from .sources import load_table
 from .sources.export import export_jsonl_shards
+from .util import pin_scope
 
 
 @dataclass
@@ -71,9 +72,17 @@ def run_curation(spark: SparkSession, config: dict[str, Any]) -> CurationRun:
     """Execute the configured stage chain over the input corpus.
 
     Every stage reuses the suite operator (same expression trees the
-    driver hash-checks); the surviving doc-id set threads through as
-    left-semi joins, so each stage prunes without rewriting the
-    upstream frames.
+    DuckDB oracles check), built over the one ``documents`` frame the
+    run reads; the surviving doc-id set threads through as left-semi
+    joins, so each stage prunes without rewriting the upstream frames.
+
+    With ``output.dir`` set, the build and the export run inside one
+    :func:`util.pin_scope`: the stages' cached shingles, bands and
+    SemDeDup routing belong to this run and are released when the
+    export returns, so a later run in the same process over a
+    rewritten corpus under the same path reads the new files. Without
+    an output the returned ``result`` is lazy, and the pins stay until
+    the host calls :func:`util.release_pins`.
 
     Scale note: at 100 TB each stage boundary would be materialized
     (checkpoint / intermediate table) rather than fused — partly for
@@ -81,11 +90,26 @@ def run_curation(spark: SparkSession, config: dict[str, Any]) -> CurationRun:
     are worth persisting; the semi-join chaining here IS the logical
     plan either way, and swapping ``survivors`` for a written table
     between stages changes no stage's code."""
-    from .suite.dedup import q_dedup_minhash_lsh
+    out = config.get("output") or {}
+    if not out.get("dir"):
+        return _curate(spark, config)
+    with pin_scope():
+        run = _curate(spark, config)
+        run.shards = export_jsonl_shards(
+            run.result,
+            os.path.join(out["dir"], "examples"),
+            shards_hint=out.get("shards"),
+        )
+    return run
+
+
+def _curate(spark: SparkSession, config: dict[str, Any]) -> CurationRun:
+    """The stage chain of :func:`run_curation`, up to the lazy result."""
+    from .suite.dedup import minhash_lsh_pairs
     from .suite.text import (
-        q_line_dedup_rewrite,
-        q_quality_classifier,
+        line_dedup_frame,
         q_span_corruption,
+        quality_classifier_frame,
     )
 
     sf_dir = config["input"]["sf_dir"]
@@ -107,25 +131,21 @@ def run_curation(spark: SparkSession, config: dict[str, Any]) -> CurationRun:
             flt = flt.filter(F.col("lang").isin(*fc["langs"]))
         keep = flt.select("doc_id")
         if fc.get("classifier"):
-            clf = q_quality_classifier(spark, sf_dir).filter("keep").select("doc_id")
+            clf = quality_classifier_frame(docs).filter("keep").select("doc_id")
             keep = keep.join(clf, "doc_id", "left_semi")
         survivors = survivors.join(keep, "doc_id", "left_semi")
         if report:
             run.counts["filter"] = survivors.count()
 
     if stages.get("line_dedup"):
-        cleaned = (
-            q_line_dedup_rewrite(spark, sf_dir)
-            .filter("clean_chars > 0")
-            .select("doc_id")
-        )
+        cleaned = line_dedup_frame(docs).filter("clean_chars > 0").select("doc_id")
         survivors = survivors.join(cleaned, "doc_id", "left_semi")
         if report:
             run.counts["line_dedup"] = survivors.count()
 
     if stages.get("near_dedup"):
         losers = (
-            q_dedup_minhash_lsh(spark, sf_dir)
+            minhash_lsh_pairs(docs)
             .select(F.col("id_b").alias("doc_id"))
             .distinct()
         )
@@ -166,13 +186,6 @@ def run_curation(spark: SparkSession, config: dict[str, Any]) -> CurationRun:
     if report:
         run.counts["output"] = result.count()
 
-    out = config.get("output") or {}
-    if out.get("dir"):
-        run.shards = export_jsonl_shards(
-            result,
-            os.path.join(out["dir"], "examples"),
-            shards_hint=out.get("shards"),
-        )
     return run
 
 

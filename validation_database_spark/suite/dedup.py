@@ -389,11 +389,16 @@ q_dedup_containment = q_dedup_containment_capped
 # --- MinHash + LSH near-dup -------------------------------------------
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full MinHash-LSH pipeline: shingle → 16 seeded min-hashes →
-    4 bands × 4 rows → bucket-join candidates → exact-Jaccard verify.
-    Candidate generation is O(bucket sizes), not O(n²) — the scale
-    path for corpus-level near-dup at 100 TB."""
-    docs = load_table(spark, "documents", sf_dir)
+    """:func:`minhash_lsh_pairs` over the fixture documents."""
+    return minhash_lsh_pairs(load_table(spark, "documents", sf_dir))
+
+
+def minhash_lsh_pairs(docs: DataFrame) -> DataFrame:
+    """Full MinHash-LSH pipeline over ``docs`` (doc_id, text):
+    shingle → 16 seeded min-hashes → 4 bands × 4 rows → bucket-join
+    candidates → exact-Jaccard verify. Candidate generation is
+    O(bucket sizes), not O(n²) — the scale path for corpus-level
+    near-dup at 100 TB."""
     # persist: consumed by the signature pass and (twice) by the
     # exact-Jaccard verify join.
     shingles = pin(D.exploded_shingles(docs))

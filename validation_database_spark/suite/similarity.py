@@ -1130,38 +1130,33 @@ def semantic_dedup_hier_frame(vecs: DataFrame) -> DataFrame:
     q_semantic_dedup_hier spec (which runs it on the planted-dup
     fixture corpus). The curation pipeline's ``semantic_dedup`` stage
     calls this on the raw embeddings table. Returns one row per
-    vector: (vec_id, cluster, n_dups, keep)."""
+    vector: (vec_id, cluster, n_dups, keep); ``vec_id`` must be
+    unique in ``vecs``."""
     withn = vecs.select(
         "vec_id", "embedding", l2_norm(F.col("embedding")).alias("__nrm")
     )
-    # pin: the normalized corpus feeds three consumers (the quantized
-    # routing side twice — seed filter + vector scoring — and the
-    # final au join); unpinned, the union+spread+normalize prep
-    # (measured 4.1 s of sf10's cold) re-runs per consumer.
-    # Normalize-once is also the documented 100 TB shape (the RAG
-    # chunk index materializes its unit vectors the same way).
-    u = pin(
-        spread(withn).select(
-            "vec_id",
-            F.transform(
-                "embedding", lambda x: x.cast("double") / F.col("__nrm")
-            ).alias("u"),
-        )
+    # Normalize-once is the documented 100 TB shape (the RAG chunk
+    # index materializes its unit vectors the same way); here the unit
+    # vectors ride inside the pinned routing pass `v2c` below.
+    u = spread(withn).select(
+        "vec_id",
+        F.transform(
+            "embedding", lambda x: x.cast("double") / F.col("__nrm")
+        ).alias("u"),
     )
-    xu = u.select("vec_id", _to_e6(F.col("u")).alias("x"))
+    x = _to_e6(F.col("u"))
     mk = F.md5(F.col("vec_id").cast("string"))
-    # pin: fine feeds f2c plus both TakeOrdered coarse consumers —
-    # seed-table-sized (~n/50), so the pin is cheap and saves two
-    # recomputes of the full-corpus normalize+quantize scan.
-    fine = pin(
-        xu.filter(F.substring(mk, 1, 4) < F.lit(SEMDEDUP_SEED_HEX)).select(
-            F.col("vec_id").alias("fcid"), F.col("x").alias("fx"), mk.alias("mk")
-        )
-    )
+    # Fine seeds ARE vectors (a row sample keyed on vec_id alone), so
+    # their fine-cell routing is the vectors' own and comes from the
+    # one routing pass; `is_fine` reads only vec_id, so the build-time
+    # coarse collect below pushes it down to the scan and normalizes
+    # the ~n/50 fine rows only.
+    is_fine = F.substring(mk, 1, 4) < F.lit(SEMDEDUP_SEED_HEX)
     coarse = (
-        fine.orderBy("mk", "fcid")
+        u.filter(is_fine)
+        .orderBy(mk, "vec_id")
         .limit(SEMDEDUP_COARSE_CAP)
-        .select(F.col("fcid").alias("ccid"), F.col("fx").alias("cx"))
+        .select(F.col("vec_id").alias("ccid"), x.alias("cx"))
     )
 
     def _sqdist(a, b):
@@ -1202,21 +1197,41 @@ def semantic_dedup_hier_frame(vecs: DataFrame) -> DataFrame:
     # first-min tie-break over id-sorted seeds ≡ min(struct(d, id)),
     # so the DuckDB oracle is untouched.
     nearest_coarse = _nearest_seed_arrow(coarse, "ccid", "cx")
-    # fine seed -> coarse cell (K seeds × C, trivially small)
-    f2c = fine.select("fcid", nearest_coarse(F.col("fx")).alias("ccid"), "fx")
-    # vector -> coarse cell (n×C dots, one Arrow-batched projection)
-    v2c = xu.select("vec_id", nearest_coarse(F.col("x")).alias("ccid"), "x")
+    # vector -> coarse cell (n×C dots, one Arrow-batched projection).
+    # pin: this is the ONLY kernel pass. Both consumers below read it
+    # (the fine seeds' cell lists and the per-vector fine argmin), and
+    # the ccid equi-join makes the optimizer infer
+    # isnotnull(nearest(x)) and push it below the projection, where
+    # ExtractPythonUDFs evaluates the kernel a second time for the
+    # filter; above a cached relation that filter reads the stored
+    # ccid. Each Arrow task costs ~0.2 s of Python-worker CPU whatever
+    # its rows, so every extra evaluation is paid in full.
+    v2c = pin(u.select("vec_id", nearest_coarse(x).alias("ccid"), "u"))
     # exact fine argmin WITHIN the coarse cell: per-cell seed lists
     # (the IVF posting list of centroids — ~K/256 entries each, ~√K
     # under the documented C≈√K sizing) broadcast-joined on ccid, so
     # the n-row pass again stays narrow: n × ~K/256 dots, zero fan-out
-    cell_seeds = f2c.groupBy("ccid").agg(
-        F.sort_array(F.collect_list(F.struct("fcid", "fx"))).alias("seeds")
+    cell_seeds = (
+        v2c.filter(is_fine)
+        .groupBy("ccid")
+        .agg(
+            F.sort_array(
+                F.collect_list(
+                    F.struct(F.col("vec_id").alias("fcid"), x.alias("fx"))
+                )
+            ).alias("seeds")
+        )
     )
-    a = v2c.join(F.broadcast(cell_seeds), "ccid").select(
-        "vec_id", _argmin(F.col("seeds"), F.col("x"), "fcid", "fx").alias("cid")
+    # pin: `au` feeds both sides of the within-cluster self-join and
+    # the final keep join. It is built from `v2c` directly, with no
+    # join back to the unit vectors on vec_id. That makes a unique
+    # `vec_id` a precondition: a join-back fanned an id present d
+    # times out to d² rows; without it the d rows pass through as d.
+    au = pin(
+        v2c.join(F.broadcast(cell_seeds), "ccid").select(
+            "vec_id", _argmin(F.col("seeds"), x, "fcid", "fx").alias("cid"), "u"
+        )
     )
-    au = pin(a.join(u, "vec_id").select("vec_id", "cid", "u"))
     return _semdedup_from_assignments(au)
 
 

@@ -1881,6 +1881,11 @@ QC_THRESH_MILLI = 0  # keep iff avg token milli-logit > 0
 
 
 def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`quality_classifier_frame` over the fixture documents."""
+    return quality_classifier_frame(load_table(spark, "documents", sf_dir))
+
+
+def quality_classifier_frame(docs: DataFrame) -> DataFrame:
     """Linear bag-of-words quality classifier APPLICATION — the
     fasttext-style model-scoring primitive of a crawl pipeline (score
     every doc with a tiny linear model, keep the high-logit ones; cf.
@@ -1900,7 +1905,7 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-int lookup per token, zero shuffles before the final (absent
     here) filter; the weight vector rides in the plan as a literal
     array exactly like a broadcast model would."""
-    docs = spread(load_table(spark, "documents", sf_dir))
+    docs = spread(docs)
     # SQL strings since round 13 (py4j plan-build cut, VERDICT r12
     # ask #7): the weight literal alone was 64 F.lit round trips per
     # build. Literal rendering of the prior Column trees,
@@ -2041,6 +2046,11 @@ LINE_TOKS = 12      # fixture docs have no sentence delimiters: a "line"
 
 
 def q_line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """:func:`line_dedup_frame` over the fixture documents."""
+    return line_dedup_frame(load_table(spark, "documents", sf_dir))
+
+
+def line_dedup_frame(docs: DataFrame) -> DataFrame:
     """C4's line-level dedup (Raffel et al. 2020 §2.2: lines occurring
     more than once in the dataset are discarded) WITH the rewrite step
     the scoring ops stop short of: docs split into lines (fixed
@@ -2057,7 +2067,7 @@ def q_line_dedup_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     (array_sort over the collected struct list), never a global sort.
     Distinct-doc ≥2 (not total ≥2) keeps within-doc repetition — that
     is `unit_text_repetition`'s department."""
-    docs = spread(load_table(spark, "documents", sf_dir))
+    docs = spread(docs)
     toks = _tokens(F.col("text"))
     starts = F.sequence(F.lit(1), F.greatest(F.size("toks"), F.lit(1)), F.lit(LINE_TOKS))
     lines = (
